@@ -69,7 +69,7 @@ def rfm_features(
     exact: bool = False,
 ) -> DataFrame:
     """RFM customer features — the store-facing recipe behind the
-    q_rfm query key (operators/relational2.py), with the SCALE path as
+    q_rfm query key (operators/stats.py), with the SCALE path as
     the default: recency/frequency/monetary aggregates per customer,
     scored 1..``buckets`` per dimension.
 

@@ -93,8 +93,7 @@ def _adjacency(edges: DataFrame, src: str, dst: str) -> DataFrame:
     # the adjacency build carries the upstream edge pipeline (for dedup,
     # the whole MinHash banding) — register it so plan audits see it
     # past the lineage cut
-    plan_inspect.register_subplan(pre)
-    return pre.localCheckpoint(eager=False)
+    return plan_inspect.checkpoint(pre)
 
 
 def _propagate(
@@ -338,7 +337,10 @@ def pagerank_integer(
     like connected_components. N is a single driver-side scalar (one
     count — a graph-level constant, not per-row data)."""
     outw = edges.groupBy(src).agg(F.sum(weight).cast("long").alias("_ow"))
-    e = edges.join(outw, src).select(
+    # LEFT join: a NULL-src edge never matches outw but still names its
+    # dst (and NULL) as graph nodes, so both paths below take the node
+    # set from this one frame
+    e = edges.join(outw, src, "left").select(
         F.col(src).alias("_src"),
         F.col(dst).alias("_dst"),
         F.col(weight).cast("long").alias("_w"),
@@ -350,8 +352,7 @@ def pagerank_integer(
     # lineitem→orders→customer→supplier join pipeline, re-run 10×
     # (r17 catch: 7.7 s → the build runs once and the rounds iterate on
     # the graph-sized frame as the docstring already claimed)
-    plan_inspect.register_subplan(e)
-    e = e.localCheckpoint(eager=False)
+    e = plan_inspect.checkpoint(e)
     # Driver path for BOUNDED graphs: ONE bounded collect of the
     # weighted edge list (limit-guarded — a caller may pass a
     # multigraph); nodes, N, and the rounds all derive from it in exact
@@ -392,8 +393,8 @@ def pagerank_integer(
                     contrib: dict = {}
                     for row in rows:
                         es, ed = row["_src"], row["_dst"]
-                        if es is None or ed is None:
-                            continue  # SQL null-join semantics
+                        if es is None or ed is None or row["_w"] is None:
+                            continue  # SQL null-join / NULL-sum semantics
                         c = (ranks[es] * row["_w"]) // row["_ow"]
                         contrib[ed] = contrib.get(ed, 0) + c
                     ranks = {
@@ -406,8 +407,8 @@ def pagerank_integer(
                     [(v, ranks[v]) for v in node_list], out_schema
                 )
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
+        e.select(F.col("_src").alias("node"))
+        .union(e.select(F.col("_dst").alias("node")))
         .distinct()
         .localCheckpoint(eager=False)
     )

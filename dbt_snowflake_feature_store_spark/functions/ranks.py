@@ -110,8 +110,7 @@ def _ranked(
     # range exchange this primitive exists to introduce — register the
     # pre-checkpoint frame so inspect.capture_subplans sees it (no-op
     # outside an audit).
-    plan_inspect.register_subplan(pre)
-    ranged = pre.localCheckpoint(eager=False)
+    ranged = plan_inspect.checkpoint(pre)
     # bounded: P rows, not data rows. The same collect PROVES the
     # monotonically_increasing_id layout assumption (pid·2³³ + local
     # record number): for every partition the min/max mid must span
@@ -298,15 +297,17 @@ def bucketed_running_sum(
     whose per-bucket SUM(weight) EQUALS this frame's per-bucket
     SUM(value) — it lets the caller histogram from a cheaper upstream
     (e.g. the raw fact below an aggregate) instead of re-executing
-    ``df``'s subtree. If the bucket count exceeds ``max_buckets`` the
+    ``df``'s subtree. It may hold several rows per bucket: they are
+    summed here. If the bucket count exceeds ``max_buckets`` the
     function falls back to :func:`global_running_sum` (correct at any
     domain, just pays the range machinery)."""
-    if hist_df is not None:
-        hist = hist_df.toDF("_fs_bk", "_fs_w")
-    else:
-        hist = df.groupBy(F.col(bucket_col).alias("_fs_bk")).agg(
-            F.sum(F.col(value_col).cast("long")).alias("_fs_w")
-        )
+    if hist_df is None:
+        hist_df = df.select(bucket_col, value_col)
+    hist = (
+        hist_df.toDF("_fs_bk", "_fs_w")
+        .groupBy("_fs_bk")
+        .agg(F.sum(F.col("_fs_w").cast("long")).alias("_fs_w"))
+    )
     rows = hist.limit(max_buckets + 1).collect()
     if len(rows) > max_buckets:
         out = global_running_sum(
@@ -314,19 +315,16 @@ def bucketed_running_sum(
             rank_col="_fs_brs_rank", sum_col=sum_col,
         )
         return out.drop("_fs_brs_rank")
-    weights: dict[int, int] = {}
-    for r in rows:
-        if r["_fs_bk"] is None:
-            raise ValueError(
-                "bucketed_running_sum: NULL bucket — the bucket column "
-                "must be non-null (derive it from a non-null order key)"
-            )
-        weights[int(r["_fs_bk"])] = int(r["_fs_w"] or 0)
+    if any(r["_fs_bk"] is None for r in rows):
+        raise ValueError(
+            "bucketed_running_sum: NULL bucket — the bucket column "
+            "must be non-null (derive it from a non-null order key)"
+        )
     offsets: dict[int, int] = {}
     acc = 0
-    for bk in sorted(weights):
-        offsets[bk] = acc
-        acc += weights[bk]
+    for r in sorted(rows, key=lambda r: r["_fs_bk"]):
+        offsets[int(r["_fs_bk"])] = acc
+        acc += int(r["_fs_w"] or 0)
     # offsets attach via a BROADCAST JOIN on the bucket key, not a
     # literal create_map lookup: a literal map/array is rebuilt and
     # linearly scanned PER ROW (the NOTES r16 640-literal-array
@@ -396,22 +394,23 @@ def bounded_kth_smallest(
             .alias("_fs_bk")
         )
         .agg(F.count("*").cast("long").alias("_fs_n"))
+        .orderBy(F.col("_fs_bk").asc_nulls_first())
         .limit(max_buckets + 1)
         .collect()
     )
-    if len(hist) > max_buckets:
+    # the NULL refusal runs before the over-gate return: a caller that
+    # falls back to the rank machinery would otherwise rank NULL
+    # silently. NULLs-first ordering keeps the NULL bucket inside the
+    # limit on both sides of the gate.
+    if any(r["_fs_bk"] is None for r in hist):
+        raise ValueError(
+            "bounded_kth_smallest: NULL value — the selection "
+            "column must be non-null (NULL already orders "
+            "differently across engines)"
+        )
+    if len(hist) > max_buckets or not hist:
         return None
-    if not hist:
-        return None
-    counts: dict[int, int] = {}
-    for r in hist:
-        if r["_fs_bk"] is None:
-            raise ValueError(
-                "bounded_kth_smallest: NULL value — the selection "
-                "column must be non-null (NULL already orders "
-                "differently across engines)"
-            )
-        counts[int(r["_fs_bk"])] = int(r["_fs_n"])
+    counts = {int(r["_fs_bk"]): int(r["_fs_n"]) for r in hist}
     n = sum(counts.values())
     kk = (n + 1) // 2 if k is None else int(k)
     if not 1 <= kk <= n:
@@ -539,8 +538,7 @@ def global_drawup_scan(
             "_fs_lp", F.sum(F.col(value_col).cast("long")).over(wloc)
         )
     )
-    plan_inspect.register_subplan(pre)
-    ranged = pre.localCheckpoint(eager=False)
+    ranged = plan_inspect.checkpoint(pre)
     # ONE bounded P-row collect: sizes (mid-layout proof, same contract
     # as _ranked), per-partition value sums, per-partition min local
     # prefix sums.

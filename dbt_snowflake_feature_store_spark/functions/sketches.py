@@ -293,7 +293,7 @@ def bloom_build_sql(
 ) -> str:
     """FV body SQL maintaining a per-key Bloom filter over registered
     source ``source`` — the streaming-maintainable form of the
-    q_bloom_filter build (operators/relational5.py; identical salted-
+    q_bloom_filter build (operators/stats.py; identical salted-
     md5 bit spelling). Columns: keys…, word, bw. ``bit_or`` is a keyed
     aggregation, and OR is monotone-merge-exact (new arrivals can only
     set bits), so the update-mode foreachBatch-MERGE path maintains

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions import similarity as SIM
 from ..functions.literal import literal_df
+from ..plans.inspect import checkpoint
 from ..sources.tables import read_table
 
 _QUERY_ID = 0
@@ -960,16 +961,6 @@ ORACLE: dict[str, str] = {
 # its output is value-identical to q_sim_topk (pytest-pinned id-set
 # equality) — the exact-path oracle hash-gates both keys.
 ORACLE["q_sim_topk_fast"] = ORACLE["q_sim_topk"]
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Register-then-checkpoint: lineage cut for a multiply-referenced
-    frame, with the pre-cut plan registered so PLANS.md audits see its
-    exchanges (the ranks._ranked / graph.py discipline)."""
-    from ..plans import inspect as plan_inspect
-
-    plan_inspect.register_subplan(df)
-    return df.localCheckpoint(eager=False)
 
 
 QUERIES = {
@@ -2413,7 +2404,7 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("j").alias("i"), F.col("i").alias("j"), "cc"
         )
     )
-    cpr = _ckpt(
+    cpr = checkpoint(
         full.select(
             "i", "j", F.expr(f"cc DIV {_PCA_DOWN}").cast("long").alias("c")
         )
@@ -3070,14 +3061,14 @@ def q_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the cuts is ≤100-row arithmetic (the RRF precedent); the
     label join broadcasts a 10-row frame."""
     lex = _rrf_lex_ranked(spark, sf_dir)
-    # _ckpt: rel fans into rtot AND the label join — without the cut
+    # checkpoint: rel fans into rtot AND the label join — without the cut
     # the corpus-scale semantic scoring pass would run twice (the
     # q_confusion_metrics lesson). The trailing limit is a row-wise
     # no-op (the frame is ≤10 rows by the _rs filter) that restores a
     # GlobalLimit ABOVE the checkpoint cut, so the forced-broadcast
     # sweep can still prove the broadcast side bounded (the checkpoint
     # is a LogicalRDD — lineage-opaque to the labeler).
-    rel = _ckpt(
+    rel = checkpoint(
         _rrf_sem_ranked(spark, sf_dir)
         .filter(F.col("_rs") <= _NDCG_K)
         .select("vec_id")
@@ -3232,13 +3223,13 @@ def q_confusion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the confusion matrix is L×L-bounded BY CONSTRUCTION; both
     marginals and the metric arithmetic are matrix-sized — the corpus
     cost is q_centroid_classify's (one broadcast-join scoring pass)."""
-    # _ckpt: the L×L confusion frame fans into both marginals below —
+    # checkpoint: the L×L confusion frame fans into both marginals below —
     # without the lineage cut the corpus-scale centroid-scoring pass
     # (the only data-proportional stage) would execute per reference
     # (VERDICT-r11 weak #1: 18 shuffles where ~8 suffice). Both
     # marginals + the diagonal ride ONE union-then-aggregate over the
     # matrix-sized frame (2·L² rows) — no joins at all.
-    cm = _ckpt(
+    cm = checkpoint(
         q_centroid_classify(spark, sf_dir).select("f_true", "f_pred", "f_n")
     )
     diag = F.col("f_true") == F.col("f_pred")
@@ -3430,7 +3421,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = F.col("_dot").cast("double") / (
         F.sqrt(F.col("_na").cast("double")) * F.sqrt(F.lit(float(nq)))
     )
-    scored = _ckpt(
+    scored = checkpoint(
         base.crossJoin(F.broadcast(consts))
         .withColumn(
             "_dot",

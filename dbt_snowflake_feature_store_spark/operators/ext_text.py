@@ -9,13 +9,13 @@ declare no oracle → driver records rows-only checks.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TXT
+from ..functions.literal import literal_df
+from ..plans.inspect import checkpoint
 from ..sources.tables import read_table
-
-_DEC = "decimal(28,6)"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,7 +108,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop the rest. Oracle-gated: the unique fixed point of min-label
     propagation lets a DuckDB recursive CTE verify the clustering.
     Pair frame shared with q_corpus_dedup_stats via _portable_pairs."""
-    from pyspark.sql import Window
 
     from ..functions.graph import connected_components
 
@@ -304,7 +303,6 @@ def _ngram_blocked_pairs(
         # sizes agg + broadcast join — the shingle build now executes
         # once instead of three times (q_dedup_edit got the same
         # treatment). Identical surviving blocks.
-        from pyspark.sql import Window
 
         sh = (
             sh.withColumn(
@@ -395,7 +393,6 @@ def q_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays are materialized columns (HOF rule); explode is pipelined, the
     count shuffles on (lang, bigram), the rank window shuffles on the
     tiny lang key. Deterministic rank: count desc, bigram asc."""
-    from pyspark.sql import Window
 
     d = _docs(spark, sf_dir)
     toks = d.select(
@@ -495,7 +492,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     256 docs). The emitted pack id is globally unique and deterministic:
     ``shard * 1_000_000 + local_pack`` (a 256-doc shard cannot reach 10⁶
     local bins)."""
-    from pyspark.sql import Window
 
     d = _docs(spark, sf_dir)
     toks = d.select(
@@ -868,7 +864,6 @@ def q_negative_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     old ``doc_id % 50`` slice grew with n: n²/50 quadratic). rank ≤ 4
     per anchor gets Spark 4's map-side WindowGroupLimit (losers pruned
     BEFORE the shuffle)."""
-    from pyspark.sql import Window
 
     d = _docs(spark, sf_dir).select("doc_id")
     ah = F.expr(
@@ -974,7 +969,6 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = (
         (F.col("doc_id") % 1000000007) * F.lit(2654435761 % 1000000007)
     ) % 1000000007
-    from pyspark.sql import Window
 
     base = d.select("doc_id", "lang", "n_chars", h.alias("f_h")).withColumn(
         "_pid", F.spark_partition_id()
@@ -1398,7 +1392,6 @@ def q_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ReusedExchange in the executed plan — verified) — the total branch
     reads the shuffle output, not the corpus. ppm uses the half-up floor
     spelling (cross-engine ROUND invariant)."""
-    from pyspark.sql import Window
 
     d = _docs(spark, sf_dir)
     toks = d.select(
@@ -2537,3 +2530,1279 @@ QUERIES = {
     "q_multimodal_resize": q_multimodal_resize,
     "q_multimodal_frames": q_multimodal_frames,
 }
+
+
+def q_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LATERAL FLATTEN ≡ explode (the reference's metadata-validation
+    pattern, test_feature_view_metadata_structure.sql:20-33, applied to
+    data): explode document tokens → top-20 token frequencies.
+    Scale: explode is pipelined (no shuffle); the count shuffles on the
+    token key; top-k is TakeOrderedAndProject."""
+    d = read_table(spark, sf_dir, "documents")
+    return (
+        d.select(F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token"))
+        .groupBy("token")
+        .agg(F.count("*").alias("f_count"))
+        .orderBy(F.col("f_count").desc(), F.col("token").asc())
+        .limit(20)
+    )
+
+
+ORACLE["q_explode_tokens"] = """
+    SELECT token, COUNT(*) AS f_count
+    FROM (
+        SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
+        FROM documents
+    )
+    GROUP BY token
+    ORDER BY f_count DESC, token ASC
+    LIMIT 20
+"""
+QUERIES["q_explode_tokens"] = q_explode_tokens
+
+
+# ---------------------------------------------------------------------------
+# Document co-occurrence lift (exp-PMI)
+# ---------------------------------------------------------------------------
+
+
+def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token association mining, oracle-gated: for every token pair
+    co-occurring in ≥ 10 documents (df ≥ 5 each), the LIFT ratio
+    N·df(a,b) / (df(a)·df(b)) — the exp of pointwise mutual
+    information, monotone-equivalent to PMI for ranking but computable
+    in exact arithmetic (BIGINT products < 2^53, one correctly-rounded
+    IEEE division, floor to ppm) where ln is not correctly-rounded in
+    every runtime. Top-50 by lift with a full (lift, a, b) tiebreak.
+
+    Scale: the pair stage is the quadratic step — it is bounded by
+    restricting to the df-thresholded vocabulary (broadcast semi-join)
+    BEFORE the per-document self-join, the standard co-occurrence
+    guard; doc-frequency aggregates are map-side combinable; the
+    corpus size joins in as a 1-row broadcast."""
+    d = read_table(spark, sf_dir, "documents")
+    # r18: toks fans into dfreq AND the vocabulary-restricted stream,
+    # and vocab fans into the semi-join + BOTH marginal broadcasts —
+    # without a lineage cut the corpus explode+distinct executed FOUR
+    # times per run (the q_pagerank discipline). ONE cut on toks: the
+    # corpus pass runs once; vocab stays an Aggregate over the
+    # checkpointed stream (three cheap re-aggregations of materialized
+    # rows) so its broadcast sides keep the `reduced(...)` label — a
+    # checkpointed vocab would be a LogicalRDD the forced-broadcast
+    # sweep cannot prove bounded.
+    toks = checkpoint(
+        d.select(
+            "doc_id",
+            F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
+                "tok"
+            ),
+        )
+        .filter(F.length("tok") > 0)
+        .distinct()
+    )
+    dfreq = toks.groupBy("tok").agg(F.count("*").cast("long").alias("df"))
+    vocab = dfreq.filter(F.col("df") >= 5)
+    vt = toks.join(F.broadcast(vocab.select("tok")), "tok", "left_semi")
+    # r18 (the q_graph_triangles r17 treatment): the per-document token
+    # self-join (two sorted exchanges + SMJ) becomes ONE doc-keyed
+    # collect_list shuffle with the (i < j) pair expansion ROW-LOCAL —
+    # per-doc tokens are DISTINCT (toks is distinct), so sorted-array
+    # position order i < j is exactly the x.tok < y.tok strict pair set
+    # under the same UTF8-binary comparator.
+    byd = vt.groupBy("doc_id").agg(
+        F.expr("array_sort(collect_list(tok))").alias("_ts")
+    )
+    pairs = (
+        byd.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(_ts, (x, i) ->"
+                    " transform(slice(_ts, i + 2, size(_ts)),"
+                    " y -> struct(x AS a, y AS b))))"
+                )
+            ).alias("_pr")
+        )
+        .groupBy(F.col("_pr.a").alias("f_a"), F.col("_pr.b").alias("f_b"))
+        .agg(F.count("*").cast("long").alias("f_docs_both"))
+        .filter(F.col("f_docs_both") >= 10)
+    )
+    n = d.agg(F.count("*").cast("long").alias("_n"))
+    out = (
+        pairs.join(
+            F.broadcast(vocab.select(F.col("tok").alias("f_a"), F.col("df").alias("f_docs_a"))),
+            "f_a",
+        )
+        .join(
+            F.broadcast(vocab.select(F.col("tok").alias("f_b"), F.col("df").alias("f_docs_b"))),
+            "f_b",
+        )
+        .crossJoin(F.broadcast(n))
+        .withColumn(
+            "f_lift_ppm",
+            F.expr(
+                "CAST(floor(CAST(_n * f_docs_both AS DOUBLE)"
+                " / CAST(f_docs_a * f_docs_b AS DOUBLE)"
+                " * 1000000.0 + 0.5) AS BIGINT)"
+            ),
+        )
+    )
+    return (
+        out.select(
+            "f_a", "f_b", "f_docs_both", "f_docs_a", "f_docs_b", "f_lift_ppm"
+        )
+        .orderBy(F.col("f_lift_ppm").desc(), "f_a", "f_b")
+        .limit(50)
+    )
+
+
+QUERIES["q_token_pmi"] = q_token_pmi
+
+
+ORACLE["q_token_pmi"] = """
+    WITH toks AS (
+        SELECT DISTINCT doc_id, tok FROM (
+            SELECT doc_id,
+                   unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
+            FROM documents
+        ) WHERE length(tok) > 0
+    ),
+    dfreq AS (
+        SELECT tok, CAST(COUNT(*) AS BIGINT) AS df
+        FROM toks GROUP BY tok
+    ),
+    vocab AS (SELECT tok, df FROM dfreq WHERE df >= 5),
+    vt AS (SELECT t.doc_id, t.tok FROM toks t
+           WHERE t.tok IN (SELECT tok FROM vocab)),
+    pairs AS (
+        SELECT x.tok AS f_a, y.tok AS f_b,
+               CAST(COUNT(*) AS BIGINT) AS f_docs_both
+        FROM vt x JOIN vt y
+          ON x.doc_id = y.doc_id AND x.tok < y.tok
+        GROUP BY x.tok, y.tok
+        HAVING COUNT(*) >= 10
+    ),
+    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS _n FROM documents)
+    SELECT p.f_a, p.f_b, p.f_docs_both,
+           va.df AS f_docs_a, vb.df AS f_docs_b,
+           CAST(floor(CAST(n._n * p.f_docs_both AS DOUBLE)
+                / CAST(va.df * vb.df AS DOUBLE)
+                * 1000000.0 + 0.5) AS BIGINT) AS f_lift_ppm
+    FROM pairs p
+    JOIN vocab va ON va.tok = p.f_a
+    JOIN vocab vb ON vb.tok = p.f_b, n
+    ORDER BY f_lift_ppm DESC, f_a ASC, f_b ASC
+    LIMIT 50
+"""
+
+
+# ---------------------------------------------------------------------------
+# BPE segmentation with a frozen merge table
+# ---------------------------------------------------------------------------
+
+
+def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer APPLICATION with a frozen merge table
+    (functions/bpe.FIXED_MERGES), ORACLE-GATED — the production shape:
+    segmentation ships a fixed vocab artifact, so unlike the
+    data-dependent q_bpe_train (rows-only by design, 20 learned
+    iterations), the apply step IS SQL-replayable: DuckDB re-runs the
+    exact rank-sequential greedy fold as a recursive CTE over the
+    distinct-word dictionary and the full token sequence of every
+    document is hash-checked (sequence order included — f_tokens is
+    the '|'-joined stream).
+
+    Scale: the Spark side is ``bpe_segment_by_key`` — the DICTIONARY
+    TRICK both engines share (fold each DISTINCT word once on the
+    vocab-sized frame, broadcast the word→symbols map onto the
+    positional word stream, reassemble per doc): the nested native
+    fold runs |vocab| times, not |corpus| times — the same
+    vocab-not-corpus insight bpe_train uses (37 s → ~1 s at sf0.1 vs
+    the per-instance fold). Zero Python in any row path. Large merge
+    tables take the ``bpe_segment_fast`` pandas_udf trie instead
+    (equivalence pytest-pinned on this corpus and table)."""
+    from ..functions.bpe import bpe_segment_by_key, fixed_merge_table
+
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    seg = bpe_segment_by_key(d, fixed_merge_table())
+    return seg.select(
+        "doc_id",
+        F.size("bpe_tokens").cast("long").alias("f_n_tokens"),
+        F.array_join("bpe_tokens", "|").alias("f_tokens"),
+    )
+
+
+QUERIES["q_bpe_segment"] = q_bpe_segment
+
+
+def _bpe_segment_oracle() -> str:
+    from ..functions.bpe import END_MARK, FIXED_MERGES, fixed_merge_values_sql
+
+    n = len(FIXED_MERGES)
+    return f"""
+    WITH RECURSIVE m(rank, l, r) AS (VALUES {fixed_merge_values_sql()}),
+    words AS (
+        SELECT doc_id, arr, i, arr[i] AS word
+        FROM (SELECT doc_id,
+                     regexp_split_to_array(trim(text), '\\s+') AS arr
+              FROM documents),
+             LATERAL (SELECT unnest(generate_series(1, len(arr))) AS i) u
+    ),
+    w(word) AS (SELECT DISTINCT word FROM words),
+    init AS (
+        SELECT word,
+               list_append(string_split(word, ''), '{END_MARK}') AS syms
+        FROM w
+    ),
+    fold(word, rank, pos, syms, acc) AS (
+        SELECT word, 0, 1, syms, CAST([] AS VARCHAR[]) FROM init
+        UNION ALL
+        SELECT f.word,
+               CASE WHEN f.pos > len(f.syms) THEN f.rank + 1 ELSE f.rank END,
+               CASE WHEN f.pos > len(f.syms) THEN 1 ELSE f.pos + 1 END,
+               CASE WHEN f.pos > len(f.syms) THEN f.acc ELSE f.syms END,
+               CASE WHEN f.pos > len(f.syms) THEN CAST([] AS VARCHAR[])
+                    WHEN len(f.acc) > 0 AND f.acc[-1] = m.l
+                         AND f.syms[f.pos] = m.r
+                    THEN list_append(f.acc[1:len(f.acc) - 1], m.l || m.r)
+                    ELSE list_append(f.acc, f.syms[f.pos]) END
+        FROM fold f JOIN m ON m.rank = f.rank
+        WHERE f.rank < {n}
+    ),
+    seg AS (SELECT word, syms FROM fold WHERE rank = {n}),
+    flat AS (
+        SELECT ws.doc_id,
+               flatten(list(s.syms ORDER BY ws.i)) AS toks
+        FROM words ws JOIN seg s ON s.word = ws.word
+        GROUP BY ws.doc_id
+    )
+    SELECT doc_id,
+           CAST(len(toks) AS BIGINT) AS f_n_tokens,
+           array_to_string(toks, '|') AS f_tokens
+    FROM flat
+"""
+
+
+ORACLE["q_bpe_segment"] = _bpe_segment_oracle()
+
+
+# ---------------------------------------------------------------------------
+# Integer surprisal scoring (bits-per-token quality signal)
+# ---------------------------------------------------------------------------
+
+
+def q_doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unigram SURPRISAL quality score, ORACLE-GATED: each token's
+    information content is approximated by ⌊log2⌊N/c⌋⌋ bits (N = corpus
+    token count, c = the token's corpus frequency) — the pure-integer
+    spelling ``length(bin(N DIV c)) − 1`` both engines share (the HDR
+    octave trick; IEEE log2 is never correctly-rounded cross-engine,
+    so real log-prob perplexity can only be rows-only). Per document:
+    total bits, token count, bits-per-token — rare-vocab/gibberish
+    documents score HIGH, templated/boilerplate docs LOW; the CCNet-
+    style quality-filter signal with a hash-checkable estimator.
+
+    Scale: the frequency dictionary is |vocab|-sized and BROADCASTS
+    into the token stream (the skewed token key never shuffles —
+    q_token_rarity's discipline); N is a 1-row broadcast; the per-doc
+    agg is map-side combinable."""
+    d = read_table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id",
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"),
+    ).filter(F.length("tok") > 0)
+    freq = toks.groupBy("tok").agg(F.count("*").cast("long").alias("tf"))
+    n = freq.agg(F.sum("tf").cast("long").alias("_N"))
+    scored = (
+        toks.join(F.broadcast(freq), "tok")
+        .crossJoin(F.broadcast(n))
+        .withColumn(
+            "_bits", F.expr("CAST(length(bin(_N DIV tf)) - 1 AS BIGINT)")
+        )
+    )
+    return scored.groupBy("doc_id").agg(
+        F.count("*").cast("long").alias("f_n_toks"),
+        F.sum("_bits").cast("long").alias("f_bits"),
+        (F.sum("_bits").cast("double") / F.count("*").cast("double")).alias(
+            "f_bits_per_tok"
+        ),
+    )
+
+
+ORACLE["q_doc_surprisal"] = """
+    WITH toks AS (
+        SELECT doc_id, tok FROM (
+            SELECT doc_id,
+                   unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+            FROM documents
+        ) WHERE length(tok) > 0
+    ),
+    freq AS (
+        SELECT tok, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY tok
+    ),
+    n AS (SELECT CAST(SUM(tf) AS BIGINT) AS _N FROM freq)
+    SELECT t.doc_id,
+           CAST(COUNT(*) AS BIGINT) AS f_n_toks,
+           CAST(SUM(length(bin(n._N // f.tf)) - 1) AS BIGINT) AS f_bits,
+           CAST(SUM(length(bin(n._N // f.tf)) - 1) AS DOUBLE)
+               / CAST(COUNT(*) AS DOUBLE) AS f_bits_per_tok
+    FROM toks t JOIN freq f ON t.tok = f.tok CROSS JOIN n
+    GROUP BY t.doc_id
+"""
+QUERIES["q_doc_surprisal"] = q_doc_surprisal
+
+
+# ---------------------------------------------------------------------------
+# Vocabulary coverage cut points
+# ---------------------------------------------------------------------------
+
+
+def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer-design query, ORACLE-GATED: the smallest frequency-
+    ranked vocabulary covering 50% / 90% / 99% of corpus token mass
+    (rank order: count desc, token asc — total, so the cumulative sums
+    hash-gate). The coverage test is INTEGER (cum·100 ≥ pct·N): no
+    float threshold ever feeds the row selection (CLAUDE.md
+    invariant).
+
+    Scale note: a whitespace-token vocabulary over a web-scale corpus
+    is 10⁸–10⁹ rows — NOT a bounded universe — so the rank + running
+    sum go through ``ranks.global_running_sum`` (range exchange →
+    parallel per-range local sorts → prefix-sum offsets from one
+    bounded P-row collect; the only window is PARTITIONED by the range
+    id). No unpartitioned window node anywhere (plan-asserted in
+    tests/test_scale_plans.py); the corpus-scale work is one
+    map-side-combinable token count."""
+    from ..functions.ranks import global_running_sum
+
+    d = read_table(spark, sf_dir, "documents")
+    toks = d.select(
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok")
+    ).filter(F.length("tok") > 0)
+    freq = toks.groupBy("tok").agg(F.count("*").cast("long").alias("cnt"))
+    ranked = global_running_sum(
+        freq,
+        [F.col("cnt").desc(), F.col("tok").asc()],
+        value_col="cnt",
+        rank_col="_rank",
+        sum_col="_cum",
+    ).select("tok", "cnt", "_rank", "_cum")
+    tot = freq.agg(F.sum("cnt").cast("long").alias("_N"))
+    pcts = literal_df(spark, [(50,), (90,), (99,)], "f_pct LONG")
+    cut = (
+        ranked.crossJoin(F.broadcast(tot))
+        .crossJoin(F.broadcast(pcts))
+        .filter(F.col("_cum") * 100 >= F.col("f_pct") * F.col("_N"))
+        .groupBy("f_pct")
+        .agg(F.min("_rank").alias("f_vocab_size"))
+    )
+    return cut.join(
+        ranked.select(F.col("_rank").alias("f_vocab_size"), "_cum"),
+        "f_vocab_size",
+    ).select(
+        "f_pct", "f_vocab_size", F.col("_cum").alias("f_tokens_covered")
+    )
+
+
+ORACLE["q_vocab_coverage"] = """
+    WITH toks AS (
+        SELECT tok FROM (
+            SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+            FROM documents
+        ) WHERE length(tok) > 0
+    ),
+    freq AS (
+        SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM toks GROUP BY tok
+    ),
+    ranked AS (
+        SELECT tok, cnt,
+               CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, tok ASC)
+                    AS BIGINT) AS _rank,
+               CAST(SUM(cnt) OVER (ORDER BY cnt DESC, tok ASC
+                                   ROWS UNBOUNDED PRECEDING)
+                    AS BIGINT) AS _cum
+        FROM freq
+    ),
+    tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS _N FROM freq),
+    pcts(f_pct) AS (VALUES (CAST(50 AS BIGINT)), (90), (99)),
+    cut AS (
+        SELECT p.f_pct, MIN(r._rank) AS f_vocab_size
+        FROM ranked r CROSS JOIN tot CROSS JOIN pcts p
+        WHERE r._cum * 100 >= p.f_pct * tot._N
+        GROUP BY p.f_pct
+    )
+    SELECT c.f_pct, c.f_vocab_size, r._cum AS f_tokens_covered
+    FROM cut c JOIN ranked r ON c.f_vocab_size = r._rank
+"""
+QUERIES["q_vocab_coverage"] = q_vocab_coverage
+
+
+# ---------------------------------------------------------------------------
+# TF-IDF top terms (integer-exact keyword extraction)
+# ---------------------------------------------------------------------------
+
+_TFIDF_TOPK = 5
+
+
+def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document TOP-5 keywords by tf·⌊log2⌊N/df⌋⌋, ORACLE-GATED —
+    keyword extraction / topic tagging over the corpus. IDF uses the
+    pure-integer bit-length spelling ``length(bin(N DIV df)) − 1``
+    (the q_doc_surprisal / HDR octave trick: IEEE log is never
+    correctly-rounded cross-engine, integer bits are), so the score is
+    an exact BIGINT and the key hash-gates.
+
+    Scale: tf is one map-side-combinable (doc, tok) count; df is one
+    (tok) count OVER the tf table (each (doc, tok) row is distinct, so
+    COUNT(*) per tok IS the document frequency — no countDistinct
+    shuffle of raw tokens); the score join shuffles on tok with NO
+    forced broadcast (a web-scale vocabulary is unbounded — the
+    q_vocab_coverage lesson — so AQE decides, and skewed stop-words
+    are exactly the keys IDF zeroes out); the top-5 window partitions
+    by doc_id (per-doc group, bounded)."""
+    d = read_table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id",
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"),
+    ).filter(F.length("tok") > 0)
+    tf = toks.groupBy("doc_id", "tok").agg(
+        F.count("*").cast("long").alias("f_tf")
+    )
+    dfreq = tf.groupBy("tok").agg(F.count("*").cast("long").alias("f_df"))
+    ndocs = tf.groupBy().agg(
+        F.countDistinct("doc_id").cast("long").alias("_N")
+    )
+    scored = (
+        tf.join(dfreq, "tok")
+        .crossJoin(F.broadcast(ndocs))
+        .withColumn(
+            "f_score",
+            (
+                F.col("f_tf")
+                * F.expr("CAST(length(bin(_N DIV f_df)) - 1 AS BIGINT)")
+            ).cast("long"),
+        )
+    )
+    w = Window.partitionBy("doc_id").orderBy(
+        F.col("f_score").desc(), F.col("tok").asc()
+    )
+    return (
+        scored.withColumn("f_rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("f_rank") <= _TFIDF_TOPK)
+        .select("doc_id", "f_rank", "tok", "f_tf", "f_df", "f_score")
+    )
+
+
+ORACLE["q_tfidf_topterms"] = f"""
+    WITH toks AS (
+        SELECT doc_id, tok FROM (
+            SELECT doc_id,
+                   unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+            FROM documents
+        ) WHERE length(tok) > 0
+    ),
+    tf AS (
+        SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS f_tf
+        FROM toks GROUP BY doc_id, tok
+    ),
+    dfreq AS (
+        SELECT tok, CAST(COUNT(*) AS BIGINT) AS f_df FROM tf GROUP BY tok
+    ),
+    n AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS _N FROM tf),
+    scored AS (
+        SELECT tf.doc_id, tf.tok, tf.f_tf, dfreq.f_df,
+               CAST(tf.f_tf * (length(bin(n._N // dfreq.f_df)) - 1)
+                    AS BIGINT) AS f_score
+        FROM tf JOIN dfreq ON tf.tok = dfreq.tok CROSS JOIN n
+    ),
+    ranked AS (
+        SELECT doc_id, tok, f_tf, f_df, f_score,
+               CAST(ROW_NUMBER() OVER (
+                   PARTITION BY doc_id ORDER BY f_score DESC, tok ASC
+               ) AS BIGINT) AS f_rank
+        FROM scored
+    )
+    SELECT doc_id, f_rank, tok, f_tf, f_df, f_score
+    FROM ranked WHERE f_rank <= {_TFIDF_TOPK}
+"""
+QUERIES["q_tfidf_topterms"] = q_tfidf_topterms
+
+
+# ---------------------------------------------------------------------------
+# Normalization-robust exact dedup
+# ---------------------------------------------------------------------------
+
+
+def q_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact dedup on the NORMALIZED 100-char PREFIX, ORACLE-GATED:
+    lowercase → strip non-alphanumerics → collapse whitespace runs →
+    trim → first 100 chars, then md5-group — catches the re-cased /
+    re-punctuated / re-wrapped AND truncated/extended variants that
+    raw-byte exact dedup misses (the C4/CCNet normalize-then-hash
+    recipe; the prefix grain is what makes it non-vacuous on corpora
+    whose duplicates share heads but diverge in tails). Output: one
+    row per duplicate CLUSTER (hash, kept min doc_id, size ≥ 2).
+
+    Cross-engine regex discipline: explicit ASCII classes only —
+    Java's \\s includes \\x0B where RE2's does not, so the pattern
+    spells [ \\t\\r\\n] literally; DuckDB regexp_replace needs the 'g'
+    flag to match Spark's replace-all. Scale: one map-side-combinable
+    hash-group; normalization is per-row codegen, no shuffle added."""
+    d = read_table(spark, sf_dir, "documents")
+    norm = F.substring(
+        F.trim(
+            F.regexp_replace(
+                F.regexp_replace(
+                    F.lower(F.col("text")), "[^a-z0-9 \t\r\n]", ""
+                ),
+                "[ \t\r\n]+",
+                " ",
+            )
+        ),
+        1,
+        100,
+    )
+    # r18: normalize ONCE into a materialized column and gate via an
+    # explode of a guarded 1-element array (the q_dedup_edit shape) —
+    # the standalone filter(length(norm) > 0) was predicate-pushed
+    # below the Project and re-evaluated the two-regexp chain per row.
+    # Identical surviving rows: length > 0 emits exactly one hash,
+    # else none; NULL text yields a NULL guard -> none.
+    nrm = d.select("doc_id", norm.alias("_fs_nrm"))
+    docs = nrm.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "IF(length(_fs_nrm) > 0, array(md5(_fs_nrm)), array())"
+            )
+        ).alias("f_norm_hash"),
+    )
+    return (
+        docs.groupBy("f_norm_hash")
+        .agg(
+            F.min("doc_id").cast("long").alias("f_keep_id"),
+            F.count("*").cast("long").alias("f_n_dups"),
+        )
+        .filter(F.col("f_n_dups") >= 2)
+    )
+
+
+ORACLE["q_dedup_normalized"] = """
+    WITH docs AS (
+        SELECT doc_id,
+               substr(trim(regexp_replace(
+                   regexp_replace(lower(text), '[^a-z0-9 \t\r\n]', '', 'g'),
+                   '[ \t\r\n]+', ' ', 'g')), 1, 100) AS _norm
+        FROM documents
+    )
+    SELECT md5(_norm) AS f_norm_hash,
+           CAST(MIN(doc_id) AS BIGINT) AS f_keep_id,
+           CAST(COUNT(*) AS BIGINT) AS f_n_dups
+    FROM docs WHERE length(_norm) > 0
+    GROUP BY md5(_norm)
+    HAVING COUNT(*) >= 2
+"""
+QUERIES["q_dedup_normalized"] = q_dedup_normalized
+
+
+# ---------------------------------------------------------------------------
+# BM25 ranked keyword search (exact-rational scoring, integer division)
+# ---------------------------------------------------------------------------
+
+_BM25_TERMS = ("window", "merge", "stream")
+_BM25_TOPK = 15
+_BM25_SCALE = 10000   # fixed-point score scale (4 decimal digits)
+_BM25_TFCAP = 30      # tf saturation cap keeps every product < 2^63
+
+
+def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25-ranked keyword search over ``documents``, ORACLE-GATED —
+    the ranked-retrieval upgrade of q_text_search's occurrence-count
+    relevance. Standard BM25 shape (k1 = 6/5, b = 3/4) with one
+    documented deviation: the IDF factor is the exact rational
+    (2(N−df)+1)/(2df+1) — i.e. the classic (N−df+0.5)/(df+0.5) WITHOUT
+    the log wrapper, because IEEE log is not correctly-rounded
+    cross-engine (the q_tfidf_topterms lesson; same monotone ordering
+    per term). Clearing every denominator turns the per-term score
+    into one BIGINT ratio:
+
+        s_t = 44·TT·(2(N−df)+1)·tf·SCALE
+              DIV (2df+1)·(20·TT·tf + 6·TT + 18·dl·N)
+
+    (TT = corpus token count, dl = doc length, avgdl = TT/N folded in;
+    44 = 20·(k1+1), 6 = 20·k1·(1−b), 18 = 20·k1·b·… after ×20·TT).
+    Integer division truncates toward zero identically in both engines
+    (all operands positive), so the summed fixed-point score is exact
+    and the key hash-gates. Bounds: tf ≤ 30 (saturation cap), TT ≤ 10⁶
+    at sf0.1, idf numerator ≤ 2N ≈ 10⁴ → worst product ≈ 10¹⁷ < 2⁶³.
+    At a true 100 TB corpus the scoring moves to doubles (ordering
+    only needs per-engine consistency there) — this key pins the
+    semantics at oracle scale.
+
+    Scale shape: ONE narrow projection computes dl and the three tf
+    columns per doc (no explode, no token shuffle — the term list is a
+    query parameter); the corpus stats (N, TT, df per term) are one
+    map-side-combinable global agg broadcast back as a 1-row frame;
+    the final ranking is TakeOrdered top-15. Single pass over text."""
+    d = read_table(spark, sf_dir, "documents")
+    base = d.select(
+        "doc_id",
+        F.trim(F.col("text")).alias("_tt"),
+        F.split(F.trim(F.col("text")), r"\s+").alias("_toks"),
+    )
+    def _tf_col(term: str, i: int):
+        # single-arg lambda ONLY: a second parameter makes F.filter pass
+        # the array INDEX as that argument (PySpark arity dispatch)
+        return (
+            F.least(
+                F.size(F.filter(F.col("_toks"), lambda t: t == F.lit(term))),
+                F.lit(_BM25_TFCAP),
+            )
+            .cast("long")
+            .alias(f"_tf{i}")
+        )
+
+    tf_cols = [_tf_col(term, i) for i, term in enumerate(_BM25_TERMS)]
+    # _dl is spelled NON-NULLABLE (coalesce with 0, r18): the final
+    # f_score_scaled > 0 filter makes Catalyst infer isnotnull(_dl) and
+    # push it below the Project, where it re-evaluated the split per
+    # row (plan-verified). With ANSI mode on (the Spark 4 default)
+    # size(NULL) is NULL, so a NULL text row gets _dl 0 — it adds 0 to
+    # SUM(_dl) as the oracle's NULL dl does, and its NULL score drops
+    # it. With ANSI off, spark.sql.legacy.sizeOfNull (default true)
+    # makes size(NULL) = -1: _dl and the tf columns of a NULL text row
+    # become -1 and the key diverges from its oracle.
+    per = base.select(
+        "doc_id",
+        F.coalesce(
+            F.when(F.length("_tt") == 0, F.lit(0)).otherwise(
+                F.size("_toks")
+            ),
+            F.lit(0),
+        )
+        .cast("long")
+        .alias("_dl"),
+        *tf_cols,
+    )
+    g = per.groupBy().agg(
+        F.count("*").cast("long").alias("_n"),
+        F.sum("_dl").cast("long").alias("_ttl"),
+        *[
+            F.sum((F.col(f"_tf{i}") > 0).cast("long"))
+            .cast("long")
+            .alias(f"_df{i}")
+            for i in range(len(_BM25_TERMS))
+        ],
+    )
+    # integer division via SQL DIV on materialized numerator/denominator
+    # columns (positive operands → identical truncation both engines)
+    work = per.crossJoin(F.broadcast(g))
+    for i in range(len(_BM25_TERMS)):
+        num = (
+            F.lit(44).cast("long")
+            * F.col("_ttl")
+            * (F.lit(2).cast("long") * (F.col("_n") - F.col(f"_df{i}")) + 1)
+            * F.col(f"_tf{i}")
+            * F.lit(_BM25_SCALE).cast("long")
+        )
+        den = (F.lit(2).cast("long") * F.col(f"_df{i}") + 1) * (
+            F.lit(20).cast("long") * F.col("_ttl") * F.col(f"_tf{i}")
+            + F.lit(6).cast("long") * F.col("_ttl")
+            + F.lit(18).cast("long") * F.col("_dl") * F.col("_n")
+        )
+        work = work.withColumn(f"_num{i}", num).withColumn(f"_den{i}", den)
+        work = work.withColumn(
+            f"_s{i}", F.expr(f"_num{i} DIV _den{i}").cast("long")
+        )
+    total = sum(F.col(f"_s{i}") for i in range(len(_BM25_TERMS)))
+    return (
+        work.withColumn("f_score_scaled", total.cast("long"))
+        .filter(F.col("f_score_scaled") > 0)
+        .select(
+            "doc_id",
+            F.col("_dl").alias("f_dl"),
+            *[
+                F.col(f"_tf{i}").alias(f"f_tf_{t}")
+                for i, t in enumerate(_BM25_TERMS)
+            ],
+            "f_score_scaled",
+            (F.col("f_score_scaled").cast("double") / _BM25_SCALE).alias(
+                "f_score"
+            ),
+        )
+        .orderBy(F.col("f_score_scaled").desc(), F.col("doc_id").asc())
+        .limit(_BM25_TOPK)
+    )
+
+
+def _bm25_oracle() -> str:
+    tf_exprs = ", ".join(
+        "LEAST(CAST(len(list_filter(regexp_split_to_array(trim(text),"
+        f" '\\s+'), t -> t = '{term}')) AS BIGINT), {_BM25_TFCAP})"
+        f" AS tf{i}"
+        for i, term in enumerate(_BM25_TERMS)
+    )
+    df_exprs = ", ".join(
+        f"CAST(SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS BIGINT)"
+        f" AS df{i}"
+        for i in range(len(_BM25_TERMS))
+    )
+    s_exprs = " + ".join(
+        f"((44 * ttl * (2 * (n - df{i}) + 1) * tf{i} * {_BM25_SCALE})"
+        f" // ((2 * df{i} + 1)"
+        f" * (20 * ttl * tf{i} + 6 * ttl + 18 * dl * n)))"
+        for i in range(len(_BM25_TERMS))
+    )
+    tf_out = ", ".join(
+        f"tf{i} AS f_tf_{t}" for i, t in enumerate(_BM25_TERMS)
+    )
+    return f"""
+    WITH per AS (
+        SELECT doc_id,
+               CAST(CASE WHEN length(trim(text)) = 0 THEN 0
+                    ELSE len(regexp_split_to_array(trim(text), '\\s+'))
+                    END AS BIGINT) AS dl,
+               {tf_exprs}
+        FROM documents
+    ),
+    g AS (
+        SELECT CAST(COUNT(*) AS BIGINT) AS n,
+               CAST(SUM(dl) AS BIGINT) AS ttl,
+               {df_exprs}
+        FROM per
+    ),
+    scored AS (
+        SELECT per.doc_id, per.dl, {', '.join(f'per.tf{i}' for i in range(len(_BM25_TERMS)))},
+               CAST({s_exprs} AS BIGINT) AS f_score_scaled
+        FROM per CROSS JOIN g
+    )
+    SELECT doc_id, dl AS f_dl, {tf_out}, f_score_scaled,
+           CAST(f_score_scaled AS DOUBLE) / {_BM25_SCALE} AS f_score
+    FROM scored WHERE f_score_scaled > 0
+    ORDER BY f_score_scaled DESC, doc_id ASC
+    LIMIT {_BM25_TOPK}
+"""
+
+
+ORACLE["q_bm25_topk"] = _bm25_oracle()
+QUERIES["q_bm25_topk"] = q_bm25_topk
+
+
+# ---------------------------------------------------------------------------
+# Edit-distance near-dup (prefix-blocked Levenshtein, exact integers)
+# ---------------------------------------------------------------------------
+
+_EDIT_BLOCK_CHARS = 20   # blocking prefix (normalized)
+_EDIT_CMP_CHARS = 200    # comparison window
+_EDIT_MAX_LEV = 40       # near-dup threshold
+_EDIT_BLOCK_CAP = 64     # max block size admitted to the pair join
+
+
+def q_dedup_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edit-distance near-dup detection, ORACLE-GATED — the fuzzy-dedup
+    family member MinHash/SimHash can't express: pairs whose NORMALIZED
+    200-char heads are within Levenshtein distance 40, candidate-blocked
+    on the normalized 20-char prefix (a pair with edits inside the
+    first 20 chars is out of blocking scope — standard
+    blocked-entity-resolution honesty, same contract as q_dedup_ngram's
+    shingle blocks). Levenshtein is an exact integer in BOTH engines
+    (dynamic-programming edit distance, no floats anywhere), so the key
+    hash-gates. Normalization reuses the q_dedup_normalized spelling
+    (explicit ASCII classes, DuckDB 'g' flag).
+
+    Scale shape: the block key is a hash-shuffle key (ONE shuffle —
+    r17: the block-size gate is a count window over that same exchange
+    instead of a separate agg + join, and the self-join's two legs are
+    ReusedExchange reads of it); blocks larger than 64 rows are
+    EXCLUDED before the self-join (the Σ block² ≤ cap·n bound of
+    q_dedup_ngram — mega-blocks mean the prefix is boilerplate and
+    belong to the MinHash path, not O(b²) pair scoring); the
+    Levenshtein DP runs per surviving pair only, THRESHOLD-BOUNDED
+    (r17: the banded O(cmp·lev_max) DP — exact distance for every kept
+    pair, −1 past the bound, identical kept rows) in codegen. No
+    Python in any row path."""
+
+    d = read_table(spark, sf_dir, "documents")
+    norm = F.trim(
+        F.regexp_replace(
+            F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 \t\r\n]", ""),
+            "[ \t\r\n]+",
+            " ",
+        )
+    )
+    # r18: normalize ONCE into a materialized column and gate via an
+    # explode of a guarded 1-element array — the old standalone
+    # filter(length(norm) >= 20) was predicate-pushed below the Project
+    # and re-evaluated the two-regexp normalize chain per row on both
+    # self-join legs (plan-verified); a Generate is a pushdown barrier,
+    # and _nrm is an attribute read (free) inside the guard. Identical
+    # surviving rows: length >= 20 emits exactly one struct, else none.
+    nrm = d.select("doc_id", norm.alias("_nrm"))
+    docs = nrm.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                f"IF(length(_nrm) >= {_EDIT_BLOCK_CHARS},"
+                f" array(struct("
+                f" substring(_nrm, 1, {_EDIT_CMP_CHARS}) AS _head,"
+                f" substring(_nrm, 1, {_EDIT_BLOCK_CHARS}) AS _bkey)),"
+                f" array())"
+            )
+        ).alias("_hb"),
+    ).select(
+        "doc_id",
+        F.col("_hb._head").alias("_head"),
+        F.col("_hb._bkey").alias("_bkey"),
+    )
+    blocked = docs.withColumn(
+        "_bn", F.count("*").over(Window.partitionBy("_bkey"))
+    ).filter(F.col("_bn") <= _EDIT_BLOCK_CAP)
+    a = blocked.select(
+        F.col("_bkey"),
+        F.col("doc_id").alias("f_id_a"),
+        F.col("_head").alias("_ha"),
+    )
+    b = blocked.select(
+        F.col("_bkey"),
+        F.col("doc_id").alias("f_id_b"),
+        F.col("_head").alias("_hb"),
+    )
+    pairs = (
+        a.join(b, "_bkey")
+        .filter(F.col("f_id_a") < F.col("f_id_b"))
+        .withColumn(
+            "f_lev",
+            F.levenshtein(
+                F.col("_ha"), F.col("_hb"), threshold=_EDIT_MAX_LEV
+            ).cast("long"),
+        )
+        # thresholded levenshtein returns -1 ABOVE the bound and never
+        # exceeds it otherwise, so `>= 0` ALONE is the exact kept-pair
+        # predicate (range [-1] ∪ [0, _EDIT_MAX_LEV]). A second
+        # `<= _EDIT_MAX_LEV` clause is redundant — and costly: pushdown
+        # inlines f_lev into the join condition, so each extra clause
+        # is one more banded-DP evaluation per candidate pair (r18:
+        # the clause drop cut the in-join levenshtein count 2 -> 1).
+        .filter(F.col("f_lev") >= 0)
+    )
+    return pairs.select("f_id_a", "f_id_b", "f_lev").orderBy(
+        F.col("f_lev").asc(), F.col("f_id_a").asc(), F.col("f_id_b").asc()
+    )
+
+
+ORACLE["q_dedup_edit"] = f"""
+    WITH docs AS (
+        SELECT doc_id,
+               substr(nrm, 1, {_EDIT_CMP_CHARS}) AS head,
+               substr(nrm, 1, {_EDIT_BLOCK_CHARS}) AS bkey
+        FROM (
+            SELECT doc_id,
+                   trim(regexp_replace(
+                       regexp_replace(lower(text), '[^a-z0-9 \t\r\n]', '',
+                                      'g'),
+                       '[ \t\r\n]+', ' ', 'g')) AS nrm
+            FROM documents
+        ) WHERE length(nrm) >= {_EDIT_BLOCK_CHARS}
+    ),
+    ok AS (
+        SELECT bkey FROM docs GROUP BY bkey
+        HAVING COUNT(*) <= {_EDIT_BLOCK_CAP}
+    ),
+    blocked AS (SELECT docs.* FROM docs JOIN ok ON docs.bkey = ok.bkey),
+    pairs AS (
+        SELECT a.doc_id AS f_id_a, b.doc_id AS f_id_b,
+               CAST(levenshtein(a.head, b.head) AS BIGINT) AS f_lev
+        FROM blocked a JOIN blocked b
+          ON a.bkey = b.bkey AND a.doc_id < b.doc_id
+    )
+    SELECT f_id_a, f_id_b, f_lev FROM pairs
+    WHERE f_lev <= {_EDIT_MAX_LEV}
+    ORDER BY f_lev ASC, f_id_a ASC, f_id_b ASC
+"""
+QUERIES["q_dedup_edit"] = q_dedup_edit
+
+
+# ---------------------------------------------------------------------------
+# Bigram conditional surprisal (integer bits, oracle-gated)
+# ---------------------------------------------------------------------------
+
+
+def q_surprisal_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BIGRAM-conditional surprisal quality score, ORACLE-GATED — the
+    context-aware upgrade of q_doc_surprisal's unigram model: each
+    token's information content given its predecessor is
+    ⌊log2⌊c(prev)/c(prev,tok)⌋⌋ bits, where c(prev,tok) is the corpus
+    bigram count and c(prev) = Σ_tok c(prev,tok) (the context's
+    outgoing mass, so the conditional model normalizes exactly). The
+    integer bit-length spelling keeps the estimator hash-checkable
+    (IEEE log2 never is). Per document: bigram count, total bits,
+    bits-per-bigram — word-salad scores HIGH (unseen transitions),
+    templated text LOW. Documents with < 2 tokens contribute no rows
+    (no transitions to score), identically in both engines.
+
+    Scale: bigrams explode once off the SAME filtered token array
+    (element_at indexing, no self-join on position); the bigram
+    dictionary is vocab²-sized and therefore NEVER force-broadcast
+    (the q_tfidf_topterms lesson — AQE decides); the context table
+    derives from the bigram table by one more combinable agg, not a
+    second corpus pass."""
+    d = read_table(spark, sf_dir, "documents")
+    base = d.select(
+        "doc_id",
+        F.expr(
+            "filter(split(trim(text), '\\\\s+'), x -> length(x) > 0)"
+        ).alias("_t"),
+    )
+    # <2-token gate inside the bigram expression (empty array -> explode
+    # emits nothing — identical rows to the old filter, and the guard
+    # also keeps ANSI element_at from ever seeing an invalid index): a
+    # standalone filter(size(_t) >= 2) is pushed below the Project and
+    # re-evaluates the split+filter chain per row (r18 §4.4 fix)
+    grams = base.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "IF(size(_t) >= 2,"
+                " transform(sequence(2, size(_t)), i ->"
+                " concat(element_at(_t, i - 1), ' ', element_at(_t, i))),"
+                " array())"
+            )
+        ).alias("gram"),
+    )
+    freq_bi = grams.groupBy("gram").agg(
+        F.count("*").cast("long").alias("bf")
+    )
+    ctx = (
+        freq_bi.withColumn("prev", F.split(F.col("gram"), " ").getItem(0))
+        .groupBy("prev")
+        .agg(F.sum("bf").cast("long").alias("cf"))
+    )
+    scored = (
+        grams.join(freq_bi, "gram")
+        .withColumn("prev", F.split(F.col("gram"), " ").getItem(0))
+        .join(ctx, "prev")
+        .withColumn(
+            "_bits", F.expr("CAST(length(bin(cf DIV bf)) - 1 AS BIGINT)")
+        )
+    )
+    return scored.groupBy("doc_id").agg(
+        F.count("*").cast("long").alias("f_n_bigrams"),
+        F.sum("_bits").cast("long").alias("f_bits"),
+        (F.sum("_bits").cast("double") / F.count("*").cast("double")).alias(
+            "f_bits_per_bigram"
+        ),
+    )
+
+
+ORACLE["q_surprisal_bigram"] = """
+    WITH base AS (
+        SELECT doc_id,
+               list_filter(regexp_split_to_array(trim(text), '\\s+'),
+                           x -> length(x) > 0) AS t
+        FROM documents
+    ),
+    grams AS (
+        SELECT doc_id,
+               unnest(list_transform(range(2, len(t) + 1),
+                                     i -> t[i-1] || ' ' || t[i])) AS gram
+        FROM base WHERE len(t) >= 2
+    ),
+    freq_bi AS (
+        SELECT gram, CAST(COUNT(*) AS BIGINT) AS bf FROM grams GROUP BY gram
+    ),
+    ctx AS (
+        SELECT string_split(gram, ' ')[1] AS prev,
+               CAST(SUM(bf) AS BIGINT) AS cf
+        FROM freq_bi GROUP BY string_split(gram, ' ')[1]
+    )
+    SELECT g.doc_id,
+           CAST(COUNT(*) AS BIGINT) AS f_n_bigrams,
+           CAST(SUM(length(bin(c.cf // f.bf)) - 1) AS BIGINT) AS f_bits,
+           CAST(SUM(length(bin(c.cf // f.bf)) - 1) AS DOUBLE)
+               / CAST(COUNT(*) AS DOUBLE) AS f_bits_per_bigram
+    FROM grams g
+    JOIN freq_bi f ON g.gram = f.gram
+    JOIN ctx c ON string_split(g.gram, ' ')[1] = c.prev
+    GROUP BY g.doc_id
+"""
+QUERIES["q_surprisal_bigram"] = q_surprisal_bigram
+
+
+# ---------------------------------------------------------------------------
+# Token-weighted median document length per language
+# ---------------------------------------------------------------------------
+
+
+def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TOKEN-WEIGHTED median document length (n_chars) per language,
+    ORACLE-GATED — robust corpus sizing where each document counts by
+    its token mass, not once (the weighted twin of q_median_mad's
+    unweighted location): the smallest length whose cumulative token
+    weight reaches half the language total (lower weighted median —
+    2·cum ≥ total, a pure-integer rule both engines spell identically).
+
+    Scale: the (lang, n_chars) pre-aggregate shrinks the corpus to the
+    bounded length DOMAIN before any window; the cumulative window
+    partitions by lang over that domain-sized frame (the
+    q_vocab_coverage pre-shrink discipline); the median pick is one
+    map-side-combinable min per lang."""
+    from ..functions.text import ws_token_count
+
+    d = read_table(spark, sf_dir, "documents")
+    w = d.select(
+        "lang",
+        "n_chars",
+        ws_token_count(F.col("text")).cast("long").alias("_w"),
+    ).groupBy("lang", "n_chars").agg(F.sum("_w").cast("long").alias("w"))
+    win = (
+        Window.partitionBy("lang")
+        .orderBy("n_chars")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    tot = w.groupBy("lang").agg(F.sum("w").cast("long").alias("_tot"))
+    cum = w.withColumn("_cum", F.sum("w").over(win).cast("long")).join(
+        F.broadcast(tot), "lang"
+    )
+    return (
+        cum.filter(F.col("_cum") * 2 >= F.col("_tot"))
+        .groupBy("lang")
+        .agg(
+            F.min("n_chars").cast("long").alias("f_median_chars"),
+            F.min("_tot").cast("long").alias("f_total_tokens"),
+        )
+    )
+
+
+
+ORACLE["q_weighted_median"] = f"""
+    WITH w AS (
+        SELECT lang, n_chars,
+               CAST(SUM(CAST({_WS_COUNT} AS BIGINT)) AS BIGINT) AS w
+        FROM documents GROUP BY lang, n_chars
+    ),
+    cum AS (
+        SELECT lang, n_chars, w,
+               CAST(SUM(w) OVER (PARTITION BY lang ORDER BY n_chars
+                                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS _cum
+        FROM w
+    ),
+    tot AS (SELECT lang, CAST(SUM(w) AS BIGINT) AS _tot FROM w GROUP BY lang)
+    SELECT cum.lang,
+           CAST(MIN(n_chars) AS BIGINT) AS f_median_chars,
+           CAST(MIN(_tot) AS BIGINT) AS f_total_tokens
+    FROM cum JOIN tot ON cum.lang = tot.lang
+    WHERE _cum * 2 >= _tot
+    GROUP BY cum.lang
+"""
+QUERIES["q_weighted_median"] = q_weighted_median
+
+
+# ---------------------------------------------------------------------------
+# Lexical diversity (type/token accounting per document)
+# ---------------------------------------------------------------------------
+
+
+def q_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LEXICAL DIVERSITY per document, ORACLE-GATED — the
+    type-token-ratio family of quality signals (templated/boilerplate
+    text scores LOW TTR, word salad HIGH): token count, distinct-type
+    count, TTR in ppm, hapax (frequency-1) count and hapax share in ppm
+    — all exact integers (integer DIV both engines).
+
+    Scale: the per-(doc, token) pre-aggregate shrinks the exploded
+    stream before the per-doc rollup; both aggs map-side combine; no
+    window, no join, linear in corpus tokens."""
+    d = read_table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id",
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"),
+    ).filter(F.length("tok") > 0)
+    per = toks.groupBy("doc_id", "tok").agg(
+        F.count("*").cast("long").alias("_c")
+    )
+    return per.groupBy("doc_id").agg(
+        F.sum("_c").cast("long").alias("f_tokens"),
+        F.count("*").cast("long").alias("f_types"),
+        F.expr(
+            "CAST(COUNT(*) * 1000000 DIV SUM(_c) AS BIGINT)"
+        ).alias("f_ttr_ppm"),
+        F.sum(F.when(F.col("_c") == 1, 1).otherwise(0)).cast("long").alias(
+            "f_hapax"
+        ),
+        F.expr(
+            "CAST(SUM(CASE WHEN _c = 1 THEN 1 ELSE 0 END) * 1000000"
+            " DIV COUNT(*) AS BIGINT)"
+        ).alias("f_hapax_ppm"),
+    )
+
+
+ORACLE["q_lexical_diversity"] = """
+    WITH toks AS (
+        SELECT doc_id, tok FROM (
+            SELECT doc_id,
+                   unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+            FROM documents
+        ) WHERE length(tok) > 0
+    ),
+    per AS (
+        SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS _c
+        FROM toks GROUP BY doc_id, tok
+    )
+    SELECT doc_id,
+           CAST(SUM(_c) AS BIGINT) AS f_tokens,
+           CAST(COUNT(*) AS BIGINT) AS f_types,
+           CAST(COUNT(*) * 1000000 // SUM(_c) AS BIGINT) AS f_ttr_ppm,
+           CAST(SUM(CASE WHEN _c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f_hapax,
+           CAST(SUM(CASE WHEN _c = 1 THEN 1 ELSE 0 END) * 1000000
+                // COUNT(*) AS BIGINT) AS f_hapax_ppm
+    FROM per GROUP BY doc_id
+"""
+QUERIES["q_lexical_diversity"] = q_lexical_diversity
+
+
+# ---------------------------------------------------------------------------
+# Token burstiness (variance-to-mean dispersion across documents)
+# ---------------------------------------------------------------------------
+
+_BURST_MIN_DF = 20
+_BURST_TOPK = 20
+
+
+def q_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token BURSTINESS — the variance-to-mean dispersion index of a
+    token's per-document counts (zeros included), ORACLE-GATED: bursty
+    tokens (topical words that pile into few docs) score HIGH, function
+    words ~1, which is how a pipeline separates content terms from glue
+    without a stopword list. Exact rational spelling over N docs:
+    VMR = (N·Σx² − (Σx)²) · 1e6 DIV (N·Σx) in DECIMAL(38,0)/HUGEINT —
+    zeros enter through N, never materialized. Top-20 by VMR (df ≥ 20
+    support floor; ties → token asc).
+
+    Scale: per-(doc, token) pre-agg → per-token sufficient statistics
+    (Σx, Σx², df) in ONE combinable agg; N is a 1-row broadcast; the
+    ranking is TakeOrderedAndProject. Linear in corpus tokens."""
+    d = read_table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id",
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"),
+    ).filter(F.length("tok") > 0)
+    per = toks.groupBy("doc_id", "tok").agg(
+        F.count("*").cast("long").alias("_c")
+    )
+    stats = per.groupBy("tok").agg(
+        F.sum("_c").cast("long").alias("_sx"),
+        F.sum(F.col("_c") * F.col("_c")).cast("long").alias("_sx2"),
+        F.count("*").cast("long").alias("f_df"),
+    ).filter(F.col("f_df") >= _BURST_MIN_DF)
+    n = d.agg(F.count("*").cast("long").alias("_N"))
+    return (
+        stats.crossJoin(F.broadcast(n))
+        .select(
+            "tok",
+            "f_df",
+            F.col("_sx").alias("f_tf"),
+            F.expr(
+                "CAST((CAST(_N AS DECIMAL(38,0)) * _sx2"
+                " - CAST(_sx AS DECIMAL(38,0)) * _sx) * 1000000"
+                " DIV (CAST(_N AS DECIMAL(38,0)) * _sx) AS BIGINT)"
+            ).alias("f_vmr_ppm"),
+        )
+        .orderBy(F.col("f_vmr_ppm").desc(), F.col("tok").asc())
+        .limit(_BURST_TOPK)
+    )
+
+
+ORACLE["q_burstiness"] = f"""
+    WITH toks AS (
+        SELECT doc_id, tok FROM (
+            SELECT doc_id,
+                   unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+            FROM documents
+        ) WHERE length(tok) > 0
+    ),
+    per AS (
+        SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS _c
+        FROM toks GROUP BY doc_id, tok
+    ),
+    stats AS (
+        SELECT tok,
+               CAST(SUM(_c) AS BIGINT) AS _sx,
+               CAST(SUM(_c * _c) AS BIGINT) AS _sx2,
+               CAST(COUNT(*) AS BIGINT) AS f_df
+        FROM per GROUP BY tok
+        HAVING COUNT(*) >= {_BURST_MIN_DF}
+    ),
+    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS _N FROM documents)
+    SELECT tok, f_df, _sx AS f_tf,
+           CAST((CAST(_N AS HUGEINT) * _sx2 - CAST(_sx AS HUGEINT) * _sx)
+                * 1000000 // (CAST(_N AS HUGEINT) * _sx) AS BIGINT)
+               AS f_vmr_ppm
+    FROM stats CROSS JOIN n
+    ORDER BY f_vmr_ppm DESC, tok ASC
+    LIMIT {_BURST_TOPK}
+"""
+QUERIES["q_burstiness"] = q_burstiness
+
+
+# ---------------------------------------------------------------------------
+# Zipf tail diagnostic (frequency-octave type/mass spectrum)
+# ---------------------------------------------------------------------------
+
+
+def q_zipf_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ZIPF TAIL diagnostic, ORACLE-GATED — the frequency-OCTAVE
+    spectrum of the corpus vocabulary: per octave ⌊log2 tf⌋ (the
+    q_doc_surprisal ``length(bin(tf)) − 1`` spelling), how many types
+    land there and how much token mass they carry (ppm). A healthy
+    natural-language corpus halves its type count per octave; a
+    template-heavy or synthetic corpus shows a bulge — the
+    corpus-health dial beside q_vocab_coverage's head-mass cuts.
+
+    Scale: one corpus token-frequency agg (map-side combinable) →
+    octave rollup over the VOCAB-sized frame → ~30 output rows (int64
+    tf caps the octave domain BY CONSTRUCTION); total mass is a 1-row
+    broadcast."""
+    d = read_table(spark, sf_dir, "documents")
+    toks = d.select(
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok")
+    ).filter(F.length("tok") > 0)
+    freq = toks.groupBy("tok").agg(F.count("*").cast("long").alias("_tf"))
+    octv = freq.select(
+        F.expr("CAST(length(bin(_tf)) - 1 AS BIGINT)").alias("f_octave"),
+        "_tf",
+    ).groupBy("f_octave").agg(
+        F.count("*").cast("long").alias("f_types"),
+        F.sum("_tf").cast("long").alias("f_mass"),
+    )
+    tot = freq.agg(F.sum("_tf").cast("long").alias("_T"))
+    return octv.crossJoin(F.broadcast(tot)).select(
+        "f_octave",
+        "f_types",
+        "f_mass",
+        F.expr("CAST(f_mass * 1000000 DIV _T AS BIGINT)").alias(
+            "f_mass_ppm"
+        ),
+    )
+
+
+ORACLE["q_zipf_tail"] = """
+    WITH toks AS (
+        SELECT tok FROM (
+            SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+            FROM documents
+        ) WHERE length(tok) > 0
+    ),
+    freq AS (
+        SELECT tok, CAST(COUNT(*) AS BIGINT) AS _tf FROM toks GROUP BY tok
+    ),
+    octv AS (
+        SELECT CAST(length(bin(_tf)) - 1 AS BIGINT) AS f_octave,
+               CAST(COUNT(*) AS BIGINT) AS f_types,
+               CAST(SUM(_tf) AS BIGINT) AS f_mass
+        FROM freq GROUP BY 1
+    ),
+    tot AS (SELECT CAST(SUM(_tf) AS BIGINT) AS _T FROM freq)
+    SELECT f_octave, f_types, f_mass,
+           CAST(f_mass * 1000000 // _T AS BIGINT) AS f_mass_ppm
+    FROM octv CROSS JOIN tot
+"""
+QUERIES["q_zipf_tail"] = q_zipf_tail

@@ -21,8 +21,7 @@ from pyspark.sql import functions as F
 from ..objects import Entity, FeatureView, RefreshSpec
 from ..sources.tables import read_table
 from ..store import FeatureStore
-
-_DEC = "decimal(28,6)"
+from .sql import _DEC
 
 
 def _fs(spark: SparkSession) -> FeatureStore:

@@ -1,8 +1,11 @@
 """Query-key registry: maps SURVEY.md §2 query keys to (spark_fn, oracle_sql).
 
-Each module in this package contributes entries via ``QUERIES`` (dict of
-key → callable(spark, sf_dir) -> DataFrame) and ``ORACLE`` (dict of key →
-DuckDB SQL string, omitted for non-SQL-expressible ops).
+Each family module in this package contributes entries via ``QUERIES``
+(dict of key → callable(spark, sf_dir) -> DataFrame) and ``ORACLE``
+(dict of key → DuckDB SQL string, omitted for non-SQL-expressible ops).
+Every module is first-party and imported statically: an ImportError in
+any of them is a broken engine and propagates, never a silently smaller
+``queries()``.
 """
 
 from __future__ import annotations
@@ -11,489 +14,121 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import relational, relational2
+from . import (
+    ext_similarity,
+    ext_text,
+    feature_queries,
+    sql,
+    stats,
+    temporal,
+    tpch,
+)
 
-# Module merge order determines registry iteration order, which determines
-# which keys the driver's 50-entry CORRECTNESS record covers. High-value
-# keys first: feature-store machinery (generate_dataset, FV reads/chain),
-# then the EXT similarity/text families, then relational2; the plain
-# relational keys (lowest risk, all green in CORRECTNESS_r01) come last
-# and absorb the cap.
-_MODULES = [relational2, relational]
+_MODULES = (
+    ext_similarity, ext_text, feature_queries, sql, stats, temporal, tpch
+)
 
-# Rotation policy (round 4+): the 50-entry cap left 26 relational keys with
-# no driver-dated record for two rounds, and round 3 proved the blind spot
-# bites (q_sessionize rotted unseen). Keys least-recently recorded by the
-# driver are promoted to the FRONT of the registry for one round; update
-# this tuple each round to whatever CORRECTNESS_r{N}.json did NOT cover.
-# Full coverage every round regardless: CORRECTNESS_LOCAL_r{N}.json
-# (written by .claude/skills/verify/drive_verify.py) records all keys.
-# STANDING TWO-ROUND CYCLE (round 8+): 132 keys > 2× the 50-key driver
-# cap, so the record rotates in halves — each round promotes (a) every
-# key whose code changed this round, (b) every key whose latest driver
-# record is ≥2 rounds old, oldest first. NOTES.md tracks the per-key
-# latest-record round; no key's record may age past two rounds.
-_PRIORITY_KEYS: tuple[str, ...] = (
-    # ---- round 16 rotation (44 + 5 + 1 = the 50-key cap) ----
-    # part 1 (44): the ENTIRE r10-dated cohort — VERDICT-r15 next #1
-    # named this the r16 promotion set (17% of the inventory had no
-    # driver record since r10); computed from CORRECTNESS_r01..r15
-    # per-key latest-record rounds, oldest first, alphabetical within
+# Registry iteration order. The external correctness harness records
+# only the first 50 keys of ``queries()``, so this order decides which
+# keys its record covers; it is frozen here as data. Every key appears
+# exactly once and every module key appears here (checked by _merged).
+KEY_ORDER: tuple[str, ...] = (
     "q_bm25_topk", "q_calibration_bins", "q_centroid_classify",
     "q_chi2_assoc", "q_contain_ngram", "q_decile_lift", "q_dedup_edit",
     "q_dedup_normalized", "q_embed_centroid", "q_embed_outliers",
     "q_embed_quantize", "q_event_dedup", "q_feature_hash",
-    "q_filter_funnel", "q_gini_spend", "q_graph_triangles",
-    "q_join_asof", "q_join_asof_fwd", "q_knn_join", "q_median_mad",
-    "q_ngram_freq", "q_pack_bfd", "q_pack_sequences", "q_pii_scan",
-    "q_rrf_fusion", "q_sample_split", "q_sample_stratified",
-    "q_sample_temperature", "q_sample_to_mix", "q_sample_weighted",
-    "q_session_window", "q_surprisal_bigram", "q_target_encode",
-    "q_text_quality", "q_text_search", "q_text_stats",
-    "q_tfidf_topterms", "q_time_split", "q_token_count",
-    "q_token_rarity", "q_tpch_q13like", "q_tpch_q17like",
-    "q_vocab_build", "q_window_nav",
-    # part 2 (5): code-new/touched THIS round beyond part 1 —
-    # q_metric_cum_minmax (non-SUM cumulative accumulators) and
-    # q_join_asof_interp (interpolating as-of join) are NEW;
-    # q_confusion_metrics rides the q_centroid_classify crossJoin
-    # argmin rewrite; q_cusum_drift rides the global_drawup_scan
-    # NULL-partition guard; q_metric_tdim_path rides the conversion-
-    # filter tokenizer's numeric-literal fix (both ADVICE-r15)
-    "q_metric_cum_minmax", "q_join_asof_interp",
-    "q_confusion_metrics", "q_cusum_drift", "q_metric_tdim_path",
-    # part 3 (1): q_ann_recall — the VERDICT-r15 watch key with THREE
-    # consecutive driver-side increases; a fresh record settles
-    # creep-vs-load. The other two (q_cramers_v cleared by the idle
-    # re-profile ≈ its r15 record; q_join_interval plan-validated four
-    # rounds running) yielded their slots to the two NEW r16 keys.
-    "q_ann_recall",
-    # position 51+ — PAST the cap: the r17 promotion set is the
-    # r11-dated cohort (45 keys: q_agg_having, q_approx_distinct_sketch,
-    # q_auc_mann_whitney, q_best_split_gini, q_bloom_filter,
-    # q_burstiness, q_chunk_overlap, q_cluster_kmeans, q_cte_pipeline,
-    # q_cube, q_dedup_embed_portable, q_dedup_near_portable,
-    # q_dedup_simhash_portable, q_diverse_topk, q_embed_covariance,
-    # q_embed_pca_power, q_entropy_mix, q_group_kfold, q_histogram,
-    # q_hll_portable, q_join_asof_near, q_join_range, q_k_anonymity,
-    # q_knn_classify, q_label_churn, q_lateral_topn,
-    # q_lexical_diversity, q_negative_sample, q_ngram_novelty,
-    # q_pack_bfd_check, q_quantile_norm, q_sessionize,
-    # q_sim_ivf_portable, q_sim_ivfpq_portable, q_sim_pq_portable,
-    # q_source_divergence, q_stratified_kfold, q_user_session_features,
-    # q_vocab_coverage, q_weighted_median, q_window_frame,
-    # q_window_percentile, q_window_range, q_zipf_tail) plus whatever
-    # r17 code touches; the every-round full LOCAL sweep remains the
-    # real gate
-    # ---- round 15 rotation (26 + 22 + 2 = the 50-key cap) ----
-    # part 1 (26): every key whose code changed THIS round —
-    # (a) the de-creep rewrites: pair-distinct Spearman, fused
-    # drawup-scan CUSUM, dense-rank-staged KMV merge (kmv_kmin touched
-    # → its jaccard/setops riders re-record), three-branch
-    # q_agg_approx; (b) the ENTIRE metric/saved-query family — the
-    # models.py machinery they all ride changed again (entity-path
-    # planner bridge cache + require_time, single-primary loader gate,
-    # templated cross-model conversion filters, saved-query exports,
-    # dbt root-dir layout resolution) — plus the two NEW keys
-    # (q_metric_tdim_path, q_saved_query_export)
-    "q_spearman_corr", "q_cusum_drift", "q_kmv_sketch",
-    "q_kmv_jaccard", "q_kmv_setops", "q_agg_approx",
-    "q_metric_tdim_path", "q_saved_query_export",
-    "q_metric_eval", "q_metric_conversion", "q_metric_ratio_xmodel",
-    "q_metric_cumulative", "q_metric_window", "q_metric_offset",
-    "q_metric_timespine", "q_metric_entity_path", "q_metric_filter_dim",
-    "q_metric_conv_events", "q_metric_window_cal",
-    "q_metric_offset_grain", "q_metric_conv_xmodel",
-    "q_metric_entity_hop", "q_saved_query", "q_source_freshness",
-    "q_lsh_recall",  # idle re-profile target (VERDICT #1) — re-record
-    "q_saved_query_topn",  # NEW: saved-query order_by/limit
-    # part 2 (22): the standing r15 promotion set named at the r14
-    # position-51+ comment — the remaining r9-dated records
-    "q_doc_surprisal", "q_event_transitions", "q_attribution",
-    "q_bpe_segment", "q_contamination", "q_domain_mix",
-    "q_tpch_q7like", "q_tpch_q8like", "q_tpch_q14like",
-    "q_tpch_q15like", "q_tpch_q18like", "q_tpch_q19like",
-    "q_tpch_q21like", "q_arith_expr", "q_case_when", "q_cross_join",
-    "q_distinct", "q_filter_false", "q_scan_project",
-    "q_null_handling", "q_num_fns", "q_unpivot",
-    # part 3 (2): FS-machinery riders of the registry.py VALID_KINDS
-    # change (saved_exports) — the store's registry read paths
-    "q_fv_managed_read", "q_generate_dataset",
-    # position 51+ — PAST the cap: the r16 promotion set is the
-    # remaining backlog (q_kmv_setops is IN this round; left over:
-    # q_global_ntile/q_global_rank/q_pagerank/q_rfm re-recorded r14;
-    # oldest after this round are the r11/r12-dated relational5/6/7
-    # families — q_event_transitions-adjacent keys q_surprisal_bigram,
-    # q_kmv_setops riders, and the r10-dated q_vocab_coverage,
-    # q_gini_spend, q_tfidf_topterms, q_dedup_normalized, q_bm25_topk,
-    # q_dedup_edit, q_graph_triangles, q_centroid_classify,
-    # q_sim_pq_portable, q_sim_ivfpq_portable) plus whatever r16 code
-    # touches; the every-round full LOCAL sweep remains the real gate
-    # ---- round 14 rotation (18 + 9 + 1 + 13 + 5 + 4 = the 50-key cap;
-    # PROMOTION-HEAVY per VERDICT-r13 #1: drain the record backlog) ----
-    # part 1 (18): every key whose code is new or changed THIS round —
-    # the three new MetricFlow keys (entity-path planner, templated
-    # filters, event-grain conversion), the q_agg_approx single-buffer
-    # quartile fix, the read_table-normalized q_source_freshness, the
-    # null-safe q_hard_negatives — plus EVERY q_metric_*/q_saved_query
-    # key: the evaluate_metric group-by/filter machinery they all ride
-    # was restructured (_prepare_frame), and a code-touched key must
-    # re-record (rotation rule a)
-    "q_metric_entity_path", "q_metric_filter_dim", "q_metric_conv_events",
-    "q_metric_window_cal", "q_metric_offset_grain",
-    "q_metric_conv_xmodel", "q_metric_entity_hop",
-    "q_agg_approx", "q_source_freshness", "q_hard_negatives",
-    "q_metric_eval", "q_metric_conversion", "q_metric_ratio_xmodel",
-    "q_metric_cumulative", "q_metric_window", "q_metric_offset",
-    "q_saved_query", "q_metric_timespine",
-    # part 2 (9): the NINE 3-round-old records — the top of the r14
-    # promotion set (the one documented aging exception last round)
+    "q_filter_funnel", "q_gini_spend", "q_graph_triangles", "q_join_asof",
+    "q_join_asof_fwd", "q_knn_join", "q_median_mad", "q_ngram_freq",
+    "q_pack_bfd", "q_pack_sequences", "q_pii_scan", "q_rrf_fusion",
+    "q_sample_split", "q_sample_stratified", "q_sample_temperature",
+    "q_sample_to_mix", "q_sample_weighted", "q_session_window",
+    "q_surprisal_bigram", "q_target_encode", "q_text_quality",
+    "q_text_search", "q_text_stats", "q_tfidf_topterms", "q_time_split",
+    "q_token_count", "q_token_rarity", "q_tpch_q13like", "q_tpch_q17like",
+    "q_vocab_build", "q_window_nav", "q_metric_cum_minmax",
+    "q_join_asof_interp", "q_confusion_metrics", "q_cusum_drift",
+    "q_metric_tdim_path", "q_ann_recall", "q_spearman_corr",
+    "q_kmv_sketch", "q_kmv_jaccard", "q_kmv_setops", "q_agg_approx",
+    "q_saved_query_export", "q_metric_eval", "q_metric_conversion",
+    "q_metric_ratio_xmodel", "q_metric_cumulative", "q_metric_window",
+    "q_metric_offset", "q_metric_timespine", "q_metric_entity_path",
+    "q_metric_filter_dim", "q_metric_conv_events", "q_metric_window_cal",
+    "q_metric_offset_grain", "q_metric_conv_xmodel", "q_metric_entity_hop",
+    "q_saved_query", "q_source_freshness", "q_lsh_recall",
+    "q_saved_query_topn", "q_doc_surprisal", "q_event_transitions",
+    "q_attribution", "q_bpe_segment", "q_contamination", "q_domain_mix",
+    "q_tpch_q7like", "q_tpch_q8like", "q_tpch_q14like", "q_tpch_q15like",
+    "q_tpch_q18like", "q_tpch_q19like", "q_tpch_q21like", "q_arith_expr",
+    "q_case_when", "q_cross_join", "q_distinct", "q_filter_false",
+    "q_scan_project", "q_null_handling", "q_num_fns", "q_unpivot",
+    "q_fv_managed_read", "q_generate_dataset", "q_hard_negatives",
     "q_tpch_q4like", "q_tpch_q6like", "q_tpch_q10like", "q_tpch_q12like",
     "q_token_pmi", "q_text_repetition", "q_stats_moments", "q_retention",
-    "q_scd2_multi",
-    # part 3 (1): the late-r13 position-51+ key still missing a driver
-    # record (its green record is CORRECTNESS_LOCAL_r13.json, both SFs;
-    # q_hard_negatives, its sibling, rides part 1)
-    "q_tokenizer_fertility",
-    # part 4 (13): the dedup/sim keys displaced across r13
-    "q_dedup_exact", "q_dedup_near", "q_dedup_embed", "q_dedup_ngram",
-    "q_dedup_chunks", "q_dedup_clusters", "q_dedup_cross_source",
-    "q_corpus_dedup_stats", "q_sim_topk", "q_sim_ann_lsh", "q_sim_ivf",
-    "q_sim_range", "q_text_embed_join",
-    # part 5 (5): the FS-machinery keys displaced in r13 (the store's
-    # own read paths churn every round — highest rot risk)
-    "q_fv_chain", "q_generate_dataset", "q_fv_managed_read",
-    "q_fv_profile", "q_fv_latest_snapshot",
-    # part 6 (4): r9-dated records, risk families first (iterative
-    # graph, ranks machinery); q_doc_surprisal, q_event_transitions,
-    # q_attribution and q_kmv_setops yielded their slots to the four
-    # late new keys and lead the r15 promotion set
-    "q_pagerank", "q_rfm", "q_global_rank", "q_global_ntile",
-    # position 51+ — PAST the cap: the r15 promotion set is the
-    # remaining r9-dated keys (q_doc_surprisal, q_event_transitions,
-    # q_attribution, q_kmv_setops, q_bpe_segment, q_contamination,
-    # q_domain_mix, q_tpch_q7/q8/q14/q15/q18/q19/q21like, q_arith_expr,
-    # q_case_when, q_cross_join, q_distinct, q_filter_false,
-    # q_scan_project, q_null_handling, q_num_fns, q_unpivot — 19 keys)
-    # plus whatever r15 code touches; at 247 keys the full cycle takes
-    # five rounds at the 50-key cap, so the LOCAL sweep remains the
-    # every-round full gate
-    # ---- round 13 rotation (23 + 5 + 4 + 17 + 1 = the 50-key cap) ----
-    # part 1 (23): every key whose code is new or changed THIS round —
-    # the new keys (keyless slice-bucketed interval join, banded-LSH
-    # recall pin, semantic-layer metric evaluation ×2 + the cumulative
-    # window/grain_to_date variants, Mann-Kendall trend, grouped OLS
-    # slope, join-key skew audit, cohort LTV, sequential trigram
-    # patterns, KM hazard table, time-to-convert latency, the
-    # wave-6 quartet: Welch t², Tukey-fence outliers, weekday-residual
-    # anomaly days, inter-event gap octave spectrum, and the
-    # first-touch conversion-metric evaluation + the grain-aligned
-    # cross-model ratio) and the
-    # autocorr_from_days / psi_from_cells refactors
-    "q_join_interval_keyless", "q_lsh_recall", "q_metric_eval",
-    "q_metric_conversion", "q_metric_ratio_xmodel",
-    "q_metric_offset", "q_saved_query", "q_source_freshness",
-    "q_metric_cumulative", "q_metric_window", "q_trend_mk",
+    "q_scd2_multi", "q_tokenizer_fertility", "q_dedup_exact",
+    "q_dedup_near", "q_dedup_embed", "q_dedup_ngram", "q_dedup_chunks",
+    "q_dedup_clusters", "q_dedup_cross_source", "q_corpus_dedup_stats",
+    "q_sim_topk", "q_sim_ann_lsh", "q_sim_ivf", "q_sim_range",
+    "q_text_embed_join", "q_fv_chain", "q_fv_profile",
+    "q_fv_latest_snapshot", "q_pagerank", "q_rfm", "q_global_rank",
+    "q_global_ntile", "q_join_interval_keyless", "q_trend_mk",
     "q_ols_slope", "q_skew_audit", "q_cohort_ltv", "q_seq_patterns",
-    "q_hazard_km", "q_time_to_convert",
-    "q_welch_t", "q_anomaly_iqr", "q_seasonal_residual", "q_gap_octaves",
-    "q_autocorr_lag", "q_psi_bits",
-    # part 1c (5): the late-r13 wave-7 statistics keys + the adaptive
-    # keyless interval join (new code — a first driver record outranks
-    # a re-record)
+    "q_hazard_km", "q_time_to_convert", "q_welch_t", "q_anomaly_iqr",
+    "q_seasonal_residual", "q_gap_octaves", "q_autocorr_lag", "q_psi_bits",
     "q_kendall_tau", "q_changepoint", "q_theil_sen", "q_lorenz_deciles",
-    "q_join_interval_adaptive",
-    # part 1d (4): q_benford_digits — its statistic was extracted as
-    # benford_from_digits (sixth maintained monitor) this round, and a
-    # code-touched key must re-record — and the late
-    # join_to_timespine/fill_nulls_with key
-    "q_benford_digits", "q_metric_timespine", "q_readability",
-    "q_mi_bits",
-    # part 2 (17): the r7/r8-dated driver records — the r13 promotion
-    # set VERDICT-r12 #1 names, MINUS the four tpch-like keys
-    # (q_tpch_q4/q6/q10/q12like), q_token_pmi, q_text_repetition,
-    # q_stats_moments, q_retention and q_scd2_multi, whose slots the
-    # wave-7 quintet (incl. q_mi_bits) + q_join_interval_adaptive +
-    # the benford_from_digits-refactored q_benford_digits +
-    # q_metric_timespine + q_readability took: their code is
-    # untouched since r8 and the lowest-churn-risk in the set; they
-    # move to the TOP of the r14 promotion set (their records will be
-    # 3 rounds old — the one documented exception to the two-round
-    # aging rule this round; a brand-new key's FIRST record outranks
-    # a stable key's re-record)
-    "q_sim_ivfpq", "q_sim_pq",
-    "q_filter_pred", "q_groupby_agg", "q_join_full",
-    "q_join_skew_salted", "q_kmv_jaccard", "q_kmv_sketch", "q_lang_id",
+    "q_join_interval_adaptive", "q_benford_digits", "q_readability",
+    "q_mi_bits", "q_sim_ivfpq", "q_sim_pq", "q_filter_pred",
+    "q_groupby_agg", "q_join_full", "q_join_skew_salted", "q_lang_id",
     "q_lang_id_conf", "q_multimodal_decode", "q_multimodal_frames",
     "q_multimodal_meta", "q_multimodal_resize", "q_percentile",
-    "q_quantile_sketch", "q_scd2_history",
-    # part 3 (1): the oldest r9-dated records — FS machinery first
-    # (the store's own read paths churn every round); q_fv_chain,
-    # q_generate_dataset and q_fv_managed_read yielded their slots to
-    # the late-r13 q_metric_offset / q_saved_query /
-    # q_source_freshness (derived offset_window, saved-query
-    # evaluation, dbt source freshness) and join the r14 promotion set
-    "q_fv_static_read",
-    # position 51+ — PAST the cap: the two LAST late-r13 keys
-    # (q_tokenizer_fertility, q_hard_negatives) land here BY DESIGN —
-    # the front was full of first records already; their green record
-    # is CORRECTNESS_LOCAL_r13.json (both SFs) and they lead the r14
-    # front with the promotion set; q_dedup_exact/near/embed/ngram
-    # yielded their part-3 slots to the wave-6 quartet
-    # (q_welch_t/q_anomaly_iqr/q_seasonal_residual/q_gap_octaves),
-    # q_fv_profile to q_metric_conversion and q_fv_latest_snapshot to
-    # q_metric_ratio_xmodel (the two most self-contained of the FS
-    # six);
-    # q_dedup_chunks, q_dedup_clusters, q_dedup_cross_source,
-    # q_corpus_dedup_stats, q_sim_topk, q_sim_ann_lsh, q_sim_ivf,
-    # q_sim_range and q_text_embed_join yielded their r13 slots to the
-    # wave-2..5 new keys + the psi_from_cells-refactored q_psi_bits;
-    # they all join the
-    # r14 promotion set, which starts with the NINE 3-round-old
-    # records (q_tpch_q4/q6/q10/q12like + q_token_pmi +
-    # q_text_repetition + q_stats_moments + q_retention + q_scd2_multi
-    # — see part 2 note) and is otherwise the remaining r9-dated keys
-    # (q_arith_expr, q_attribution,
-    # q_bpe_segment, q_case_when, q_contamination, q_cross_join,
-    # q_distinct, q_doc_surprisal, q_domain_mix, q_event_transitions,
-    # q_filter_false, q_global_ntile, q_global_rank, q_kmv_setops,
-    # q_null_handling, q_num_fns, q_pagerank, q_rfm, q_scan_project,
-    # q_tpch_q7/q8/q14/q15/q18/q19/q21like, q_unpivot) plus whatever
-    # r14 code touches
-    # ---- round 12 rotation (9 + 5 + 21 + 15 = the 50-key driver cap) ----
-    # part 1 (9): every key whose code changed THIS round — the 5 NEW
-    # relational8 keys (PSI bits, Cramér's V, Spearman, CUSUM with the
-    # new ranks.global_running_min, interval-overlap join), the
-    # single-pass confusion-metrics rewrite, the two GREATEST-guarded
-    # drift keys (also refactored into ks_from_points/tvd_from_cells
-    # for the streaming-maintenance path), and the 5×k-candidate
-    # q_sim_topk_fast widening
-    "q_psi_bits", "q_cramers_v", "q_spearman_corr", "q_cusum_drift",
-    "q_join_interval", "q_confusion_metrics", "q_ks_drift",
-    "q_tvd_drift", "q_sim_topk_fast",
-    # part 1b (5): the round-12 second wave (never driver-recorded —
-    # they displace the 5 youngest r8-dated part-3 keys to position 51+)
-    "q_benford_digits", "q_autocorr_lag", "q_basket_lift",
-    "q_weekday_profile", "q_ndcg_mrr",
-    # part 2 (21): the remaining r7-dated driver records — the r12
-    # promotion set VERDICT-r11 #1 names (incl. q_window_rank and the
-    # rows-only q_bpe_train, both also r7-dated)
+    "q_quantile_sketch", "q_scd2_history", "q_fv_static_read",
+    "q_cramers_v", "q_join_interval", "q_ks_drift", "q_tvd_drift",
+    "q_sim_topk_fast", "q_basket_lift", "q_weekday_profile", "q_ndcg_mrr",
     "q_window_rank", "q_scalar_subquery", "q_semi_anti", "q_set_ops_all",
     "q_sort_limit", "q_zorder_key", "q_explode_tokens", "q_pivot",
     "q_rollup", "q_scalar_date", "q_scalar_json", "q_scalar_str",
     "q_set_ops", "q_tpch_q1like", "q_tpch_q3like", "q_tpch_q5like",
     "q_tpch_q22like", "q_union_all", "q_join_left", "q_join_multi_fv",
-    "q_bpe_train",
-    # part 3 (15): the oldest r8-dated records, oldest-first cycle
-    "q_agg_multi", "q_array_agg", "q_dedup_simhash", "q_epoch_shuffle",
-    "q_event_corr", "q_ewma_decay", "q_feature_drift", "q_fingerprint",
-    "q_fingerprint_winnow", "q_funnel", "q_gap_fill", "q_grouping_sets",
-    "q_heavy_hitters_sketch", "q_hopping", "q_join_equi",
-    # position 51+ — PAST the cap: the r13 promotion set is the
-    # remaining r8-dated keys (q_join_full, q_join_skew_salted, q_kmv_jaccard,
-    # q_kmv_sketch, q_lang_id, q_lang_id_conf, q_multimodal_decode/
-    # frames/meta/resize, q_percentile, q_quantile_sketch, q_retention,
-    # q_scd2_history, q_scd2_multi, q_stats_moments, q_text_repetition,
-    # q_token_pmi, q_tpch_q4like/q6like/q10like/q12like, q_groupby_agg,
-    # q_filter_pred) plus whatever r13 code touches
-    # ---- round 11 rotation (27 + 7 + 16 = the 50-key driver cap) ----
-    # part 1 (21): every key whose code changed THIS round — the two
-    # de-weaked eval probes (fixed-size hash-smallest anchor/query
-    # sets), the 9 literal_df-converted keys (plan-audit marker), the 3
-    # rows-only keys restructured into oracle-gated forms, and the 8
-    # brand-new r11 keys (relational7 wave + q_pack_bfd_check +
-    # q_ann_recall)
-    "q_negative_sample", "q_knn_classify",
+    "q_bpe_train", "q_agg_multi", "q_array_agg", "q_dedup_simhash",
+    "q_epoch_shuffle", "q_event_corr", "q_ewma_decay", "q_feature_drift",
+    "q_fingerprint", "q_fingerprint_winnow", "q_funnel", "q_gap_fill",
+    "q_grouping_sets", "q_heavy_hitters_sketch", "q_hopping",
+    "q_join_equi", "q_negative_sample", "q_knn_classify",
     "q_dedup_embed_portable", "q_sim_ivf_portable", "q_sim_pq_portable",
     "q_sim_ivfpq_portable", "q_cluster_kmeans", "q_embed_pca_power",
     "q_join_range", "q_bloom_filter", "q_vocab_coverage",
-    "q_sim_topk_fast", "q_agg_approx", "q_approx_distinct_sketch",
-    "q_pack_bfd_check", "q_ks_drift", "q_best_split_gini",
+    "q_approx_distinct_sketch", "q_pack_bfd_check", "q_best_split_gini",
     "q_weighted_median", "q_label_churn", "q_entropy_mix",
-    "q_stratified_kfold",
-    # part 1b (6): the round-11 second wave + the eval-metrics closer
-    # + the user-grain session rollup
-    "q_lexical_diversity", "q_burstiness", "q_zipf_tail", "q_tvd_drift",
-    "q_confusion_metrics", "q_user_session_features",
-    # (q_ann_recall rides with part 1 — see part 2 tail)
-    # part 2 (6 + 1): the r10 keys that have NEVER been driver-recorded
-    # (VERDICT-r10 #4's exact list) + the new q_ann_recall
-    "q_auc_mann_whitney", "q_diverse_topk", "q_quantile_norm",
-    "q_group_kfold", "q_source_divergence", "q_hll_portable",
-    "q_ann_recall",
-    # part 3 (16): the oldest (r7-dated) driver records, risk families
-    # first (dedup/similarity/asof, then window/scalar shapes)
-    "q_dedup_near_portable", "q_dedup_simhash_portable",
-    "q_embed_covariance", "q_join_asof_near", "q_sessionize",
-    "q_cte_pipeline", "q_lateral_topn", "q_k_anonymity", "q_cube",
-    "q_chunk_overlap", "q_ngram_novelty", "q_agg_having", "q_histogram",
-    "q_window_frame", "q_window_percentile", "q_window_range",
-    # position 51+ — PAST the cap: the remaining r7-dated keys are the
-    # r12 promotion set (q_window_rank, q_scalar_subquery, q_semi_anti, q_set_ops_all,
-    # q_sort_limit, q_zorder_key, q_explode_tokens, q_pivot, q_rollup,
-    # q_scalar_date/json/str, q_set_ops, q_tpch_q1like/q3like/q5like/
-    # q22like, q_union_all, q_join_left, q_join_multi_fv)
-    # ---- round 10 rotation (kept below the fold) ----
-    # part 1 (26): every r6-dated key — three rounds stale, the cycle's
-    # hard ceiling (VERDICT r9 What's-wrong #3 names exactly this set)
-    "q_join_asof", "q_join_asof_fwd", "q_knn_join", "q_event_dedup",
-    "q_session_window", "q_tpch_q13like", "q_tpch_q17like",
-    "q_window_nav", "q_vocab_build", "q_text_stats", "q_text_quality",
-    "q_text_search", "q_token_count", "q_token_rarity", "q_pii_scan",
-    "q_sample_split", "q_sample_stratified", "q_sample_temperature",
-    "q_sample_to_mix", "q_pack_bfd", "q_pack_sequences",
-    "q_embed_centroid", "q_embed_outliers", "q_embed_quantize",
-    "q_filter_funnel", "q_ngram_freq",
-    # part 2 (1): the VERDICT-r9-item-1 key (its de-weak "Done"
-    # criterion names CORRECTNESS_r10 explicitly). The other
-    # r10-touched keys with r9-dated records (q_event_transitions,
-    # q_epoch_shuffle, q_rfm, q_global_rank, q_global_ntile) yield
-    # their slots to never-recorded new keys — they are 1 round old,
-    # pytest- and local-sweep-covered, and join the r11 promotion set;
-    # the changed ranks machinery is exercised by the NEW gini /
-    # decile / median keys below
-    "q_vocab_coverage",
-    # part 3 (23): the round-10 NEW keys (never driver-recorded) —
-    # 13 from the r10 first wave, 10 from the second wave
-    # (relational6.py + q_contain_ngram + q_rrf_fusion)
-    "q_sim_pq_portable", "q_tfidf_topterms", "q_gini_spend",
-    "q_dedup_normalized", "q_sim_ivfpq_portable", "q_bm25_topk",
-    "q_dedup_edit", "q_cluster_kmeans", "q_graph_triangles",
-    "q_centroid_classify", "q_surprisal_bigram", "q_embed_pca_power",
-    "q_knn_classify",
-    "q_chi2_assoc", "q_target_encode", "q_decile_lift",
-    "q_feature_hash", "q_contain_ngram", "q_median_mad",
-    "q_time_split", "q_calibration_bins", "q_rrf_fusion",
-    "q_sample_weighted",
-    # position 51+ — PAST the 50-key driver cap: first entries of the
-    # r11 promotion set (new keys that missed the r10 record window;
-    # they are sf0.001/sf0.01 pytest- and local-sweep-covered)
-    "q_auc_mann_whitney", "q_diverse_topk", "q_quantile_norm",
-    "q_group_kfold", "q_source_divergence", "q_hll_portable",
-    # (the former part-4 r7-dated keys — q_sim_pq, q_sim_ivfpq,
-    # q_bpe_train, q_approx_distinct_sketch, q_dedup_near_portable —
-    # were displaced by the second-wave new keys and join the r11
-    # promotion set alongside the remaining r7/r8 keys:
-    # q_negative_sample / q_chunk_overlap / q_sessionize /
-    # q_cte_pipeline / q_lateral_topn / q_k_anonymity / q_cube /
-    # q_join_range / q_join_asof_near / q_embed_covariance, …)
-    # ---- round 9 rotation (kept below the fold: the driver records
-    # the first 50 registry keys, so these now sit past the cap) ----
-    # part 1 (15): keys whose code changed THIS round — the 8
-    # de-broadcast keys (forced customer/supplier/part hints removed,
-    # VERDICT r8 finding 1), the BPE empty-doc parity fix, the new
-    # portable IVF probe, the ranks.py fallback change (q_rfm /
-    # global rank / ntile route through ranks._ranked), and the
-    # graph.py subplan-registration touch (clusters / corpus stats)
-    "q_tpch_q7like", "q_tpch_q8like", "q_tpch_q14like", "q_tpch_q15like",
-    "q_tpch_q18like", "q_tpch_q19like", "q_tpch_q21like", "q_pagerank",
-    "q_bpe_segment", "q_sim_ivf_portable",
-    "q_rfm", "q_global_rank", "q_global_ntile",
-    "q_dedup_clusters", "q_corpus_dedup_stats",
-    # part 2 (9): the r5-dated trivial keys — 4 rounds stale, the
-    # oldest records in the ledger (demoted in r8 per the cycle note)
-    "q_arith_expr", "q_case_when", "q_cross_join", "q_distinct",
-    "q_filter_false", "q_scan_project", "q_null_handling", "q_num_fns",
-    "q_unpivot",
-    # part 3 (6): the round-9 NEW keys (relational5.py — never
-    # driver-recorded, so they outrank stale-but-green keys)
-    "q_bloom_filter", "q_event_transitions", "q_attribution",
-    "q_doc_surprisal", "q_vocab_coverage", "q_kmv_setops",
-    # part 4 (20): r6-dated keys, highest-risk families first (FV
-    # machinery, dedup, similarity). The remaining 26 r6-dated keys
-    # (join_asof/fwd, knn_join, sample_split/stratified/temperature,
-    # embed_centroid/outliers/quantize, event_dedup, filter_funnel,
-    # ngram_freq, pack_*, pii_scan, sample_to_mix, session_window,
-    # text_quality/search/stats, token_count/rarity, tpch_q13/q17like,
-    # vocab_build, window_nav) plus the 47 r7-dated keys are ROUND 10's
-    # promotion set — at 159 keys a full pass takes three rounds at
-    # the 50 cap.
-    "q_fv_chain", "q_fv_latest_snapshot", "q_fv_managed_read",
-    "q_fv_profile", "q_fv_static_read", "q_generate_dataset",
-    "q_dedup_exact", "q_dedup_near", "q_dedup_ngram", "q_dedup_chunks",
-    "q_dedup_cross_source", "q_dedup_embed", "q_contamination",
-    "q_domain_mix",
-    "q_sim_topk", "q_sim_topk_fast", "q_sim_ann_lsh", "q_sim_ivf",
-    "q_sim_range", "q_text_embed_join",
+    "q_stratified_kfold", "q_lexical_diversity", "q_burstiness",
+    "q_zipf_tail", "q_user_session_features", "q_auc_mann_whitney",
+    "q_diverse_topk", "q_quantile_norm", "q_group_kfold",
+    "q_source_divergence", "q_hll_portable", "q_dedup_near_portable",
+    "q_dedup_simhash_portable", "q_embed_covariance", "q_join_asof_near",
+    "q_sessionize", "q_cte_pipeline", "q_lateral_topn", "q_k_anonymity",
+    "q_cube", "q_chunk_overlap", "q_ngram_novelty", "q_agg_having",
+    "q_histogram", "q_window_frame", "q_window_percentile",
+    "q_window_range",
 )
 
 
-def _rotate(out: dict) -> dict:
-    front = {k: out[k] for k in _PRIORITY_KEYS if k in out}
-    front.update((k, v) for k, v in out.items() if k not in front)
-    return front
-
-
-# Registry modules in merge order. All are FIRST-PARTY: an ImportError
-# from any of them is a broken engine, not a missing optional dep — it
-# must raise, never silently shrink queries() (VERDICT r11 wrong #2:
-# ~60 keys vanishing with only a key-count diff to notice). A module is
-# skipped ONLY if its source file is genuinely absent from disk (a
-# trimmed install), and even then we warn.
-_EXT_MODULE_NAMES = (
-    "feature_queries",
-    "ext_similarity",
-    "ext_text",
-    "relational3",
-    "relational4",
-    "relational5",
-    "relational6",
-    "relational7",
-    "relational8",
-    "relational9",
-    "relational10",
-)
-
-
-def _try_ext_modules() -> None:
-    global _MODULES
-    import importlib
-    import os
-    import warnings
-
-    pkg_dir = os.path.dirname(__file__)
-    ordered = []
-    for name in _EXT_MODULE_NAMES:
-        fullname = f"{__package__}.{name}"
-        on_disk = os.path.exists(os.path.join(pkg_dir, f"{name}.py"))
-        try:
-            ordered.append(importlib.import_module(f".{name}", __package__))
-        except ImportError as e:
-            # "genuinely absent" means the module ITSELF is not found
-            # AND no source file sits on disk (bytecode-only installs
-            # have no .py, so the file check alone would downgrade a
-            # real transitive ImportError to a warning there). Anything
-            # else is a broken engine: raise.
-            absent = (
-                isinstance(e, ModuleNotFoundError)
-                and e.name == fullname
-                and not on_disk
-            )
-            if not absent:
-                raise ImportError(
-                    f"registry module '{name}' failed to import — its "
-                    f"query keys would silently vanish from queries(); "
-                    f"fix the import error: {e}"
-                ) from e
-            warnings.warn(
-                f"registry module '{name}' absent from this install — "
-                "its query keys are unavailable",
-                stacklevel=2,
-            )
-    _MODULES = ordered + [m for m in [relational2, relational] if m not in ordered]
+def _merged(attr: str) -> dict:
+    out: dict = {}
+    for m in _MODULES:
+        out.update(getattr(m, attr))
+    # every key must be ordered, and every ordered key must exist (an
+    # ORACLE entry may be absent: not every op is SQL-expressible)
+    unordered = set(out) - set(KEY_ORDER)
+    undefined = set(KEY_ORDER) - set(out) if attr == "QUERIES" else set()
+    if unordered or undefined:
+        raise RuntimeError(
+            f"{attr} disagrees with KEY_ORDER: not ordered "
+            f"{sorted(unordered)}, not defined {sorted(undefined)}"
+        )
+    return {k: out[k] for k in KEY_ORDER if k in out}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    _try_ext_modules()
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for m in _MODULES:
-        out.update(getattr(m, "QUERIES", {}))
-    return _rotate(out)
+    return _merged("QUERIES")
 
 
 def oracle_sql() -> dict[str, str]:
-    _try_ext_modules()
-    out: dict[str, str] = {}
-    for m in _MODULES:
-        out.update(getattr(m, "ORACLE", {}))
-    return _rotate(out)
+    return _merged("ORACLE")

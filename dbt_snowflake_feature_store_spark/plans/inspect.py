@@ -278,6 +278,14 @@ def register_subplan(df: DataFrame) -> None:
         pass
 
 
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Register-then-checkpoint: a lazy lineage cut for a multiply-
+    referenced frame, with the pre-cut plan registered so plan audits
+    still see its exchanges."""
+    register_subplan(df)
+    return df.localCheckpoint(eager=False)
+
+
 @contextlib.contextmanager
 def capture_subplans():
     global _CAPTURE

@@ -197,3 +197,30 @@ def test_pagerank_driver_and_distributed_paths_agree(spark):
         ).collect()
     }
     assert fast == slow and len(fast) == 4
+
+
+def test_pagerank_null_edges_paths_agree(spark):
+    """NULL endpoints on both sides of the driver gate: a NULL-src edge
+    contributes nothing but its dst (node 9, reached by no other edge)
+    and NULL itself are still nodes on both paths, so N and every rank
+    agree."""
+    from dbt_snowflake_feature_store_spark.functions.graph import (
+        pagerank_integer,
+    )
+
+    edges = spark.createDataFrame(
+        [(0, 1, 3), (1, 0, 1), (None, 9, 4), (1, None, 2)],
+        "src int, dst int, w long",
+    )
+    fast = {
+        r["node"]: r["r"]
+        for r in pagerank_integer(edges, iterations=4).collect()
+    }
+    slow = {
+        r["node"]: r["r"]
+        for r in pagerank_integer(
+            edges, iterations=4, driver_graph_nodes=0
+        ).collect()
+    }
+    assert fast == slow
+    assert set(fast) == {0, 1, 9, None}

@@ -116,6 +116,39 @@ def test_bucketed_running_sum_null_bucket_refuses(spark):
         bucketed_running_sum(df, ["k"], "v", "b", sum_col="_cum")
 
 
+def test_bucketed_running_sum_sums_multi_row_histogram(spark, monkeypatch):
+    """A caller histogram with several rows per bucket is summed per
+    bucket, not read last-write-wins, and the gate counts buckets: 3
+    buckets fit max_buckets=3 although the histogram has 6 rows, so the
+    range-machinery fallback never runs."""
+    from dbt_snowflake_feature_store_spark.functions import ranks
+    from dbt_snowflake_feature_store_spark.functions.ranks import (
+        bucketed_running_sum,
+    )
+
+    def _no_fallback(*a, **k):
+        raise AssertionError("fell back past a gate the buckets fit")
+
+    monkeypatch.setattr(ranks, "global_running_sum", _no_fallback)
+
+    rows = [(k, k + 1) for k in range(12)]
+    df = spark.createDataFrame(rows, "k long, v long").withColumn(
+        "b", F.expr("CAST(k DIV 4 AS BIGINT)")
+    )
+    # two rows per bucket, each carrying part of the bucket's weight
+    hist = df.groupBy("b", (F.col("k") % 2).alias("_p")).agg(
+        F.sum("v").cast("long").alias("w")
+    ).select("b", "w")
+    out = bucketed_running_sum(
+        df, ["k"], "v", "b", sum_col="_cum", hist_df=hist, max_buckets=3
+    )
+    got = {r["k"]: r["_cum"] for r in out.collect()}
+    acc = 0
+    for k, v in rows:
+        acc += v
+        assert got[k] == acc, (k, got[k], acc)
+
+
 # ---------------------------------------------------------------------------
 # ranks.bounded_kth_smallest — exact selection via bounded histograms
 # ---------------------------------------------------------------------------
@@ -181,3 +214,19 @@ def test_bounded_kth_smallest_refusals(spark):
         bounded_kth_smallest(
             spark.createDataFrame([(1,)], "v long"), "v", k=5
         )
+
+
+def test_bounded_kth_smallest_null_refused_past_gate(spark):
+    """A NULL-bearing column over a domain wider than max_buckets is
+    refused, not answered None (which sends the caller to the rank
+    machinery, where NULL would rank silently)."""
+    from dbt_snowflake_feature_store_spark.functions.ranks import (
+        bounded_kth_smallest,
+    )
+    import pytest
+
+    df = spark.createDataFrame(
+        [(i * 1000,) for i in range(40)] + [(None,)], "v long"
+    ).repartition(4)
+    with pytest.raises(ValueError, match="NULL value"):
+        bounded_kth_smallest(df, "v", bucket_width=1, max_buckets=2)

@@ -1,110 +1,86 @@
-"""Registry module loading must fail LOUDLY for first-party modules
-(VERDICT r11 wrong #2): an ImportError from a module that exists on
-disk would otherwise silently shrink queries() by that module's keys,
-with only a key-count diff to notice."""
+"""Registry loading and invariants: every family module is imported
+statically, so an ImportError in one must fail the registry import
+LOUDLY instead of silently shrinking queries(); and KEY_ORDER must name
+every module key exactly once."""
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 import sys
 
 import pytest
 
+PKG = "dbt_snowflake_feature_store_spark.operators"
+
 
 def test_first_party_import_error_raises(monkeypatch):
-    from dbt_snowflake_feature_store_spark.operators import registry
-
-    victim = "dbt_snowflake_feature_store_spark.operators.relational7"
+    victim = f"{PKG}.stats"
+    pkg = importlib.import_module(PKG)
 
     class _Poison:
-        def find_module(self, fullname, path=None):  # legacy protocol
-            return None
-
         def find_spec(self, fullname, path=None, target=None):
             if fullname == victim:
                 raise ImportError("poisoned for test")
             return None
 
     monkeypatch.delitem(sys.modules, victim, raising=False)
+    monkeypatch.delitem(sys.modules, f"{PKG}.registry", raising=False)
+    # ``from . import stats`` reads the package attribute before
+    # sys.modules, so unbind it too
+    monkeypatch.delattr(pkg, "stats", raising=False)
     monkeypatch.setattr(sys, "meta_path", [_Poison()] + sys.meta_path)
-    with pytest.raises(ImportError, match="relational7.*failed"):
-        registry.queries()
-
-
-def test_absent_module_warns_and_skips(monkeypatch, tmp_path):
-    """A module genuinely missing (ModuleNotFoundError for ITSELF and no
-    source file on disk — the trimmed-install state) skips with a
-    warning instead of raising — the documented optional path. The
-    victim must be a LEAF module (relational5): poisoning one that
-    another registry module imports at module level (relational7 ←
-    relational8) correctly raises instead, because the importing
-    module's failure is not self-absence."""
-    import os
-
-    from dbt_snowflake_feature_store_spark.operators import registry
-
-    victim = "dbt_snowflake_feature_store_spark.operators.relational5"
-
-    class _Poison:
-        def find_spec(self, fullname, path=None, target=None):
-            if fullname == victim:
-                raise ModuleNotFoundError(
-                    f"No module named '{victim}'", name=victim
-                )
-            return None
-
-    real_exists = os.path.exists
-
-    def fake_exists(p):
-        if p.endswith(os.path.join("operators", "relational5.py")):
-            return False
-        return real_exists(p)
-
-    monkeypatch.delitem(sys.modules, victim, raising=False)
-    monkeypatch.setattr(sys, "meta_path", [_Poison()] + sys.meta_path)
-    monkeypatch.setattr(os.path, "exists", fake_exists)
-    with pytest.warns(UserWarning, match="relational5"):
-        out = registry.queries()
-    assert "q_bloom_filter" not in out  # relational5 keys absent
-    assert "q_groupby_agg" in out  # everything else intact
+    with pytest.raises(ImportError, match="poisoned"):
+        importlib.import_module(f"{PKG}.registry")
 
 
 def test_full_registry_restores_after_poison():
-    """Run LAST in this module: a clean queries() call sees every
-    module again (the poison tests above monkeypatched per-test)."""
+    """A clean queries() call sees every module again (the poison test
+    above monkeypatched sys.modules per-test)."""
     from dbt_snowflake_feature_store_spark.operators import registry
 
     out = registry.queries()
     assert "q_ks_drift" in out and "q_groupby_agg" in out
 
 
-def test_transitive_missing_dep_raises_even_without_source(monkeypatch):
-    """Bytecode-only installs have no .py on disk — a transitive
-    ModuleNotFoundError (e.name != the registry module) must still
-    raise, never downgrade to the absent-module warning."""
-    import os
+def _module_queries() -> dict[str, dict]:
+    pkg = importlib.import_module(PKG)
+    out = {}
+    for info in pkgutil.iter_modules(pkg.__path__):
+        mod = importlib.import_module(f"{PKG}.{info.name}")
+        if hasattr(mod, "QUERIES"):
+            out[info.name] = mod.QUERIES
+    return out
 
+
+def test_key_order_covers_every_module_key_once():
     from dbt_snowflake_feature_store_spark.operators import registry
 
-    victim = "dbt_snowflake_feature_store_spark.operators.relational7"
+    order = registry.KEY_ORDER
+    assert len(order) == len(set(order))
+    per_module = _module_queries()
+    owners: dict[str, list[str]] = {}
+    for name, qs in per_module.items():
+        for key in qs:
+            owners.setdefault(key, []).append(name)
+    shadowed = {k: v for k, v in owners.items() if len(v) > 1}
+    assert not shadowed, shadowed
+    assert set(order) == set(owners)
+    assert list(registry.queries()) == list(order)
 
-    class _Poison:
-        def find_spec(self, fullname, path=None, target=None):
-            if fullname == victim:
-                raise ModuleNotFoundError(
-                    "No module named 'some_transitive_dep'",
-                    name="some_transitive_dep",
-                )
-            return None
 
-    real_exists = os.path.exists
+def test_oracle_keys_are_query_keys():
+    from dbt_snowflake_feature_store_spark.operators import registry
 
-    def fake_exists(p):
-        if p.endswith(os.path.join("operators", "relational7.py")):
-            return False  # simulate a bytecode-only install
-        return real_exists(p)
+    queries = registry.queries()
+    oracles = registry.oracle_sql()
+    assert set(oracles) <= set(queries)
+    assert list(oracles) == [k for k in registry.KEY_ORDER if k in oracles]
 
-    monkeypatch.delitem(sys.modules, victim, raising=False)
-    monkeypatch.setattr(sys, "meta_path", [_Poison()] + sys.meta_path)
-    monkeypatch.setattr(os.path, "exists", fake_exists)
-    with pytest.raises(ImportError, match="relational7.*failed"):
+
+def test_unordered_key_raises(monkeypatch):
+    from dbt_snowflake_feature_store_spark.operators import registry, sql
+
+    monkeypatch.setitem(sql.QUERIES, "q_not_in_key_order", lambda s, d: None)
+    with pytest.raises(RuntimeError, match="q_not_in_key_order"):
         registry.queries()

@@ -1,4 +1,5 @@
-"""Property tests for the round-8 second-wave keys (relational4.py) —
+"""Property tests for the gap-fill, time-decay, salted-join, co-occurrence,
+KMV, drift, correlation and PageRank keys —
 value correctness is the DuckDB oracle's job (all keys hash-MATCH);
 these pin the semantic properties and plan shapes."""
 
@@ -8,7 +9,12 @@ import os
 
 from pyspark.sql import functions as F
 
-from dbt_snowflake_feature_store_spark.operators import relational4 as R4
+from dbt_snowflake_feature_store_spark.operators import (
+    ext_text,
+    sql,
+    stats,
+    temporal,
+)
 from dbt_snowflake_feature_store_spark.sources import read_table
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -17,7 +23,7 @@ SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def test_gap_fill_complete_calendar(spark):
     """Every user covers every day from their first activity to the
     global max day — no holes, no rows before first activity."""
-    out = R4.q_gap_fill(spark, SF).collect()
+    out = temporal.q_gap_fill(spark, SF).collect()
     ev = read_table(spark, SF, "events")
     gmax = ev.agg(F.max(F.to_date("ts"))).head()[0]
     per_user: dict = {}
@@ -34,7 +40,7 @@ def test_gap_fill_forward_fill_semantics(spark):
     """f_spend is never null (first day is observed by construction);
     on gap days it equals the most recent observed day's spend."""
     rows = sorted(
-        R4.q_gap_fill(spark, SF).collect(),
+        temporal.q_gap_fill(spark, SF).collect(),
         key=lambda r: (r["user_id"], r["f_day"]),
     )
     last: dict = {}
@@ -65,7 +71,7 @@ def test_feature_drift_zero_for_identical_distributions(spark):
 def test_skew_salted_plan_joins_on_salt(spark):
     """The executed plan's join keys must include the salt column —
     the hot-key spread is structural, not an optimizer accident."""
-    df = R4.q_join_skew_salted(spark, SF)
+    df = sql.q_join_skew_salted(spark, SF)
     df.count()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "__fs_salt" in plan
@@ -74,7 +80,7 @@ def test_skew_salted_plan_joins_on_salt(spark):
 def test_token_pmi_lift_is_monotone_association(spark):
     """Output ordering is by lift desc; every row respects the df>=5
     vocab threshold and the >=10 co-occurrence floor."""
-    rows = R4.q_token_pmi(spark, SF).collect()
+    rows = ext_text.q_token_pmi(spark, SF).collect()
     lifts = [r["f_lift_ppm"] for r in rows]
     assert lifts == sorted(lifts, reverse=True)
     for r in rows:
@@ -86,7 +92,7 @@ def test_token_pmi_lift_is_monotone_association(spark):
 def test_kmv_sketch_key_bounded_output(spark):
     """The sketch never exceeds k rows per group and the kth hash is
     the max of the kept set (the estimator's denominator)."""
-    out = R4.q_kmv_sketch(spark, SF).collect()
+    out = stats.q_kmv_sketch(spark, SF).collect()
     for r in out:
         assert r["f_k"] <= 64
         assert r["f_est_distinct"] > 0
@@ -109,7 +115,7 @@ def test_ewma_half_life_property(spark):
 
 def test_ewma_horizon_cutoff(spark):
     """Days older than 20 contribute 0 — the documented hard horizon."""
-    from dbt_snowflake_feature_store_spark.operators.relational4 import (
+    from dbt_snowflake_feature_store_spark.operators.temporal import (
         q_ewma_decay,
     )
 
@@ -142,7 +148,7 @@ def test_event_corr_tracks_numpy(spark):
     the unit-rounding tolerance (daily totals round to whole units)."""
     import numpy as np
 
-    from dbt_snowflake_feature_store_spark.operators.relational4 import (
+    from dbt_snowflake_feature_store_spark.operators.stats import (
         q_event_corr,
     )
 

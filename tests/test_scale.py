@@ -85,7 +85,7 @@ class TestScaleProperties:
     def test_small_dim_join_broadcasts(self, spark):
         """Catalyst/AQE must broadcast the 25-row nation dim, not
         shuffle the fact side."""
-        from dbt_snowflake_feature_store_spark.operators.relational import q_join_equi
+        from dbt_snowflake_feature_store_spark.operators.sql import q_join_equi
 
         plan = _executed_plan(q_join_equi(spark, SF))
         assert "BroadcastHashJoin" in plan
@@ -93,7 +93,7 @@ class TestScaleProperties:
     def test_topk_never_global_sorts(self, spark):
         """ORDER BY + LIMIT must plan TakeOrderedAndProject (per-partition
         top-k + driver merge), never a global Sort."""
-        from dbt_snowflake_feature_store_spark.operators.relational import q_sort_limit
+        from dbt_snowflake_feature_store_spark.operators.sql import q_sort_limit
 
         plan = _executed_plan(q_sort_limit(spark, SF))
         assert "TakeOrderedAndProject" in plan
@@ -101,7 +101,7 @@ class TestScaleProperties:
     def test_cross_join_broadcast_nested_loop(self, spark):
         """Tiny-dim cross join plans BroadcastNestedLoopJoin — never a
         shuffled CartesianProduct."""
-        from dbt_snowflake_feature_store_spark.operators.relational2 import (
+        from dbt_snowflake_feature_store_spark.operators.sql import (
             q_cross_join,
         )
 
@@ -131,7 +131,7 @@ class TestScaleProperties:
         """Sufficient-statistics moments must be ONE hash aggregate pair
         (partial+final) with a single exchange on the group key — not a
         per-statistic replan."""
-        from dbt_snowflake_feature_store_spark.operators.relational2 import (
+        from dbt_snowflake_feature_store_spark.operators.stats import (
             q_stats_moments,
         )
 
@@ -167,11 +167,27 @@ class TestScaleProperties:
         import inspect
 
         from dbt_snowflake_feature_store_spark.functions import similarity, text
-        from dbt_snowflake_feature_store_spark.operators import relational
+        from dbt_snowflake_feature_store_spark.operators import (
+            ext_text,
+            sql,
+            temporal,
+            tpch,
+        )
 
-        for mod in (relational, text):
+        for mod in (sql, tpch, text):
             src = inspect.getsource(mod)
             assert ".collect()" not in src, mod.__name__
+        # temporal and ext_text each collect exactly one aggregated row:
+        # the q_join_interval_adaptive width probe and the opt-in
+        # log_dropped block diagnostic of the n-gram dedup. Every other
+        # key in them (as-of, range, session, explode_tokens, ...) stays
+        # on the executors.
+        for mod, fn in (
+            (temporal, temporal.q_join_interval_adaptive),
+            (ext_text, ext_text._ngram_blocked_pairs),
+        ):
+            assert inspect.getsource(mod).count(".collect()") == 1, mod.__name__
+            assert ".collect()" in inspect.getsource(fn), fn.__name__
         # similarity collects exactly three bounded things: the
         # query-vector parameter (1 row), the opt-in log_dropped
         # bucket-count diagnostic (1 aggregated row, off by default),

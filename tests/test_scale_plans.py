@@ -263,7 +263,7 @@ def test_filter_funnel_single_shuffle(spark):
 def test_event_dedup_single_shuffle_one_window(spark):
     """q_event_dedup: one shuffle on the high-cardinality
     (user, type, window) key feeding one Window — no second sort pass."""
-    from dbt_snowflake_feature_store_spark.operators.relational2 import (
+    from dbt_snowflake_feature_store_spark.operators.temporal import (
         q_event_dedup,
     )
 
@@ -629,7 +629,7 @@ def test_bm25_single_pass_no_token_shuffle(spark):
     per-doc projection, one global (1-row) stat agg broadcast back, a
     TakeOrdered top-k. No Window, no Generate (explode), no sort-merge
     join anywhere."""
-    from dbt_snowflake_feature_store_spark.operators.relational5 import (
+    from dbt_snowflake_feature_store_spark.operators.ext_text import (
         q_bm25_topk,
     )
 
@@ -647,7 +647,7 @@ def test_dedup_edit_blocked_equi_join(spark):
     block-size gate IS a window now — a count over the block-key
     partition riding the join's own exchange — so the pin checks the
     window is PARTITIONED rather than absent)."""
-    from dbt_snowflake_feature_store_spark.operators.relational5 import (
+    from dbt_snowflake_feature_store_spark.operators.ext_text import (
         q_dedup_edit,
     )
 
@@ -670,14 +670,14 @@ def test_dedup_edit_block_cap_bounds_pairs(spark):
     """Blocks above the cap must be excluded BEFORE the self-join: with
     the cap forced to 1 every block dies and the key returns 0 rows —
     proving the cap gates the quadratic stage, not a post-filter."""
-    import dbt_snowflake_feature_store_spark.operators.relational5 as r5
+    import dbt_snowflake_feature_store_spark.operators.ext_text as text_ops
 
-    orig = r5._EDIT_BLOCK_CAP
+    orig = text_ops._EDIT_BLOCK_CAP
     try:
-        r5._EDIT_BLOCK_CAP = 1
-        assert r5.q_dedup_edit(spark, SF_DIR).count() == 0
+        text_ops._EDIT_BLOCK_CAP = 1
+        assert text_ops.q_dedup_edit(spark, SF_DIR).count() == 0
     finally:
-        r5._EDIT_BLOCK_CAP = orig
+        text_ops._EDIT_BLOCK_CAP = orig
 
 
 # ---------------------------------------------------------------------------
@@ -846,7 +846,7 @@ def test_kendall_pair_join_is_broadcast_nested_loop(spark):
     BroadcastNestedLoopJoin (n² of a constant-sized side), and the
     corpus-sized orders scan must never appear on both sides of a
     sort-merge join (no fact×fact)."""
-    from dbt_snowflake_feature_store_spark.operators.relational10 import (
+    from dbt_snowflake_feature_store_spark.operators.stats import (
         q_kendall_tau,
         q_theil_sen,
     )
@@ -860,7 +860,7 @@ def test_kendall_pair_join_is_broadcast_nested_loop(spark):
 def test_changepoint_windows_partition_by_type(spark):
     """q_changepoint: every window in the executed plan partitions by
     the event-type key — no unpartitioned data-sized window."""
-    from dbt_snowflake_feature_store_spark.operators.relational10 import (
+    from dbt_snowflake_feature_store_spark.operators.stats import (
         q_changepoint,
     )
 
@@ -878,7 +878,7 @@ def test_lorenz_no_data_sized_unpartitioned_window(spark):
     unpartitioned window must run over the 10-row decile frame: its
     SinglePartition exchange feeds from the decile HashAggregate,
     never from a data-sized scan."""
-    from dbt_snowflake_feature_store_spark.operators.relational10 import (
+    from dbt_snowflake_feature_store_spark.operators.stats import (
         q_lorenz_deciles,
     )
 
@@ -960,7 +960,7 @@ def test_cusum_single_range_exchange(spark):
     ONE captured frame carries rangepartitioning, and the visible plan
     windows key on the range-partition id — no unpartitioned
     data-sized window anywhere."""
-    from dbt_snowflake_feature_store_spark.operators.relational8 import (
+    from dbt_snowflake_feature_store_spark.operators.stats import (
         q_cusum_drift,
     )
     from dbt_snowflake_feature_store_spark.plans import (
@@ -987,7 +987,7 @@ def test_kmv_merge_skips_pre_distinct(spark):
     hashpartitioning on BOTH event_type and h anywhere in the merge
     (the daily stage dedups on (event_type, _fs_day, h), which is the
     one allowed grouping exchange carrying h)."""
-    from dbt_snowflake_feature_store_spark.operators.relational4 import (
+    from dbt_snowflake_feature_store_spark.operators.stats import (
         q_kmv_sketch,
     )
 
@@ -1007,7 +1007,7 @@ def test_agg_approx_no_expand_and_domain_buffers(spark):
     aggregates consume pre-aggregated (value, count) rows — the plan
     carries no Expand node and at least three separate aggregate
     chains feed the final broadcast joins."""
-    from dbt_snowflake_feature_store_spark.operators.relational import (
+    from dbt_snowflake_feature_store_spark.operators.sql import (
         q_agg_approx,
     )
 

@@ -382,7 +382,7 @@ def test_kmv_two_stage_equals_single_window(spark):
 def test_kmv_jaccard_tracks_exact_overlap(spark):
     """Sketch-estimated Jaccard must track the exact user-set Jaccard
     per event-type pair within 0.25 absolute (k=64 union sample)."""
-    from dbt_snowflake_feature_store_spark.operators.relational4 import (
+    from dbt_snowflake_feature_store_spark.operators.stats import (
         q_kmv_jaccard,
     )
 

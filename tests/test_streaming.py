@@ -1019,7 +1019,7 @@ class TestStreamingDrift:
     def test_ks_from_maintained_points_matches_batch(
         self, fs, spark, split_events
     ):
-        from dbt_snowflake_feature_store_spark.operators.relational7 import (
+        from dbt_snowflake_feature_store_spark.operators.stats import (
             ks_from_points,
         )
 
@@ -1087,7 +1087,7 @@ class TestStreamingDrift:
     def test_tvd_from_maintained_cells_matches_batch(
         self, fs, spark, split_events
     ):
-        from dbt_snowflake_feature_store_spark.operators.relational7 import (
+        from dbt_snowflake_feature_store_spark.operators.stats import (
             tvd_from_cells,
         )
 
@@ -1157,7 +1157,7 @@ class TestStreamingDrift:
         the same maintained-state discipline as KS points / TVD cells:
         cusum_from_days over the incrementally-maintained FV equals the
         batch statistic at every arrival."""
-        from dbt_snowflake_feature_store_spark.operators.relational8 import (
+        from dbt_snowflake_feature_store_spark.operators.stats import (
             cusum_from_days,
         )
 
@@ -1217,7 +1217,7 @@ class TestStreamingDrift:
         COUNT, so the incremental FV maintains it exactly and
         autocorr_from_days over the maintained table equals the batch
         statistic at every arrival."""
-        from dbt_snowflake_feature_store_spark.operators.relational8 import (
+        from dbt_snowflake_feature_store_spark.operators.stats import (
             autocorr_from_days,
         )
 
@@ -1271,7 +1271,7 @@ class TestStreamingDrift:
         psi_from_cells over the incrementally-maintained FV equals the
         batch statistic at every arrival (drift family complete:
         KS / TVD / CUSUM / autocorr / PSI)."""
-        from dbt_snowflake_feature_store_spark.operators.relational8 import (
+        from dbt_snowflake_feature_store_spark.operators.stats import (
             psi_from_cells,
         )
 
@@ -1347,7 +1347,7 @@ class TestStreamingDrift:
         benford_from_digits over the incrementally-maintained 9-row FV
         equals the batch audit at every arrival (drift family:
         KS / TVD / CUSUM / autocorr / PSI / Benford)."""
-        from dbt_snowflake_feature_store_spark.operators.relational8 import (
+        from dbt_snowflake_feature_store_spark.operators.stats import (
             benford_from_digits,
         )
 
