@@ -20,11 +20,12 @@ by size:
     included because feature rows order before spine rows at equal ts.
 
 ``broadcast``
-    When the feature side is small (a dimension-sized FV), a broadcast
-    range-join + ``max_by`` grouped by spine row id avoids shuffling the
-    (huge) spine twice. Used automatically when the feature side is below
-    ``broadcast_threshold`` bytes (when statistics are available) or when
-    requested explicitly.
+    When the feature side is small (a dimension-sized FV), it is reduced to
+    one candidate array per key, broadcast, and probed by an equi-join; a
+    fold over the key's array picks each spine row's feature row. The
+    spine is never shuffled or regrouped. Used automatically when the
+    feature side is below ``broadcast_threshold`` bytes (when statistics
+    are available) or when requested explicitly.
 
 Both are pure DataFrame compositions — Catalyst/AQE handle partition
 coalescing and skew splitting (SURVEY.md §4.2-4.3).
@@ -39,7 +40,6 @@ from pyspark.sql import functions as F
 
 from .errors import ValidationError
 
-_SPINE_ID = "__fs_spine_id"
 _IS_SPINE = "__fs_is_spine"
 _TS = "__fs_ts"
 
@@ -168,7 +168,9 @@ def _asof_union(
     # no match), so drop it up front — otherwise it would sort at a frame
     # edge and the carry-forward could attach a timestampless row the
     # broadcast path never produces (the r5 ADVICE strategy-divergence).
-    features = features.filter(F.col(feature_ts).isNotNull())
+    # A NULL key matches nothing either (equi-join semantics): NULL-key
+    # feature rows would otherwise share a window with NULL-key spine rows.
+    features = features.dropna(subset=[feature_ts, *on])
 
     # Deterministic spine identity is NOT required here: each spine row
     # passes through the union exactly once, so row multiplicity is
@@ -374,7 +376,7 @@ def asof_join_bracket(
             f"feature timestamp '{feature_ts}' missing from features"
         )
     spine_cols = spine.columns
-    features = features.filter(F.col(feature_ts).isNotNull())
+    features = features.dropna(subset=[feature_ts, *on])
     if assert_unique:
         w_u = Window.partitionBy(*on, feature_ts)
         # spelled as a FILTER (assert_true returns NULL on success, so
@@ -465,51 +467,48 @@ def _asof_broadcast(
     tolerance: str | None,
     direction: str = "backward",
 ) -> DataFrame:
-    """Broadcast range-join + max_by (min_by forward): correct for any
-    size but joins can explode when a key has many feature rows — reserve
-    for small feature sides (Catalyst broadcasts, no shuffle of the
-    spine)."""
+    """Map-side as-of for small feature sides. The feature side is reduced
+    to ONE row per key holding every candidate as ``(k=(t, h), r)`` —
+    feature ts, the union strategy's struct-hash tiebreak, the row — so
+    the spine probes it with a broadcast EQUI-join and folds its key's
+    array to the winner: the in-range candidate with the greatest (least,
+    forward) ``(t, h)``, the row the union strategy picks. Spine rows pass
+    through untouched (no join explosion, no row id, no regroup over spine
+    columns, which would normalise -0.0/NaN); a NULL key or spine ts
+    matches nothing. Per spine row the fold costs O(feature rows of its
+    key), never more than the rows a range join would materialise."""
     spine_cols = spine.columns
-    sid = spine.withColumn(_SPINE_ID, F.monotonically_increasing_id())
-
-    feat = features.select(
-        *[F.col(k).alias(f"__fs_k_{k}") for k in on],
-        F.col(feature_ts).alias(_TS),
-        *[F.col(c).alias(f"__fs_f_{c}") for c in feature_cols],
+    key = F.struct(
+        F.col(feature_ts).alias("t"),
+        F.xxhash64(F.struct(F.col(feature_ts), *feature_cols)).alias("h"),
     )
+    cand = F.struct(
+        key.alias("k"), F.struct(*[F.col(c).alias(c) for c in feature_cols]).alias("r")
+    )
+    cands = (
+        features.filter(F.col(feature_ts).isNotNull())
+        .groupBy(*on)
+        .agg(F.collect_list(cand).alias("__fs_cands"))
+    )
+    probed = spine.join(F.broadcast(cands), on=on, how="left")
 
-    cond = F.lit(True)
-    for k in on:
-        cond = cond & (F.col(k) == F.col(f"__fs_k_{k}"))
-    if direction == "backward":
-        cond = cond & (F.col(_TS) <= F.col(spine_ts))
+    st = F.col(spine_ts)
+    back = direction == "backward"
+    if tolerance is not None:  # materialised: lambdas re-evaluate expressions
+        edge = F.expr(f"INTERVAL {tolerance}")
+        probed = probed.withColumn("__fs_edge", st - edge if back else st + edge)
+
+    def fold(acc: Column, c: Column) -> Column:
+        t = c["k"]["t"]
+        ok = (t <= st) if back else (t >= st)
         if tolerance is not None:
-            cond = cond & (
-                F.col(_TS) >= F.col(spine_ts) - F.expr(f"INTERVAL {tolerance}")
-            )
-    else:
-        cond = cond & (F.col(_TS) >= F.col(spine_ts))
-        if tolerance is not None:
-            cond = cond & (
-                F.col(_TS) <= F.col(spine_ts) + F.expr(f"INTERVAL {tolerance}")
-            )
+            edge = F.col("__fs_edge")
+            ok = ok & ((t >= edge) if back else (t <= edge))
+        wins = (c["k"] > acc["k"]) if back else (c["k"] < acc["k"])
+        return F.when(ok & (acc.isNull() | wins), c).otherwise(acc)
 
-    joined = sid.join(F.broadcast(feat), cond, "left")
-
-    # latest (earliest, forward) feature row per spine row: max_by/min_by
-    # over the feature struct — a single hash aggregate, no global window.
-    # The ordering key is (ts, struct hash) so exact-(key, ts) ties
-    # resolve to the same row the union strategy picks (deterministic
-    # across strategies/runs).
-    feat_struct = F.struct(F.col(_TS), *[F.col(f"__fs_f_{c}") for c in feature_cols])
-    order_key = F.when(
-        F.col(_TS).isNotNull(),
-        F.struct(F.col(_TS).alias("t"), F.xxhash64(feat_struct).alias("h")),
+    zero = F.lit(None).cast(cands.schema["__fs_cands"].dataType.elementType)
+    best = F.aggregate("__fs_cands", zero, fold, lambda acc: acc["r"])
+    return probed.select(*spine_cols, best.alias("__fs_best")).select(
+        *spine_cols, *[F.col("__fs_best")[c].alias(c) for c in feature_cols]
     )
-    pick = F.max_by if direction == "backward" else F.min_by
-    agg = (
-        joined.groupBy(_SPINE_ID, *[F.col(c) for c in spine_cols])
-        .agg(pick(feat_struct, order_key).alias("__fs_best"))
-    )
-    sel = [F.col(f"__fs_best.__fs_f_{c}").alias(c) for c in feature_cols]
-    return agg.select(*spine_cols, *sel)

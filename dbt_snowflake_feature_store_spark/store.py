@@ -102,6 +102,11 @@ class FeatureStore:
         self.storage = get_format(table_format, history=snapshot_history)
         # session-scoped DataFrame cache for FVs registered from a df
         self._df_cache: dict[str, DataFrame] = {}
+        # inside dataset_df: False until the first static FV binds the
+        # batch sources, True after (one binding serves the whole plan);
+        # None outside, where every plan binds afresh so a source changed
+        # between two calls is seen by the next one
+        self._sources_bound: bool | None = None
         if create_if_not_exists:
             self.registry.initialize()
         elif not self.registry.is_initialized():
@@ -527,7 +532,10 @@ class FeatureStore:
         (view inlining + pushdown are free), or the cached DataFrame.
         Registered sources are bound as batch views first."""
         if fv.sql is not None:
-            self._bind_batch_sources()
+            if not self._sources_bound:
+                self._bind_batch_sources()
+                if self._sources_bound is False:
+                    self._sources_bound = True
             return self.spark.sql(fv.sql)
         if fv.df is not None:
             return fv.df
@@ -1952,10 +1960,7 @@ class FeatureStore:
                 f"spine_timestamp_col '{spine_timestamp_col}' missing from spine"
             )
 
-        out = spine_df
-        for fv in features:
-            out = self._join_one_fv(out, fv, spine_timestamp_col)
-
+        out = self.dataset_df(spine_df, features, spine_timestamp_col)
         ds = Dataset(
             name=name,
             version=str(version),
@@ -1982,10 +1987,15 @@ class FeatureStore:
         features: Sequence[FeatureView],
         spine_timestamp_col: str | None = None,
     ) -> DataFrame:
-        """The unsaved dataset plan (for tests / previews)."""
+        """The unsaved dataset plan (for tests / previews). The batch
+        sources are bound at most once per call, not once per static FV."""
         out = spine_df
-        for fv in features:
-            out = self._join_one_fv(out, fv, spine_timestamp_col)
+        self._sources_bound = False
+        try:
+            for fv in features:
+                out = self._join_one_fv(out, fv, spine_timestamp_col)
+        finally:
+            self._sources_bound = None
         return out
 
     def retrieve_feature_values(

@@ -228,3 +228,60 @@ def test_merge_asof_parity_on_events(spark, sf_dir):
     both_nan = merged.value_spark.isna() & merged.value_pd.isna()
     equal = merged.value_spark == merged.value_pd
     assert (both_nan | equal).all()
+
+
+# few keys and a narrow ts range so exact (key, ts) ties with different
+# payloads are common; None exercises NULL keys and timestamps
+_nkeys = st.none() | st.integers(min_value=0, max_value=5)
+_nts = st.none() | st.integers(min_value=0, max_value=40)
+
+
+@st.composite
+def parity_case(draw):
+    spine = draw(st.lists(st.tuples(_nkeys, _nts), min_size=1, max_size=10))
+    feats = draw(
+        st.lists(
+            st.tuples(_nkeys, _nts, st.none() | st.integers(0, 9)),
+            min_size=0,
+            max_size=14,
+        )
+    )
+    return spine, feats
+
+
+@pytest.mark.parametrize("tolerance", [None, "10 minutes"])
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(case=parity_case())
+def test_broadcast_and_union_strategies_agree(spark, direction, tolerance, case):
+    """Both sides of the ``auto`` size gate return identical rows: the
+    same tied row wins an exact (key, ts) tie, and NULL keys, NULL
+    timestamps and keys without features attach nothing either way."""
+    spine_rows, feat_rows = case
+
+    def ts(o):
+        return None if o is None else BASE + dt.timedelta(minutes=o)
+
+    spine = spark.createDataFrame(
+        [(i, k, ts(o)) for i, (k, o) in enumerate(spine_rows)],
+        "id long, k long, ts timestamp",
+    )
+    feats = spark.createDataFrame(
+        [(k, ts(o), v) for k, o, v in feat_rows], "k long, fts timestamp, v long"
+    )
+    kw = dict(
+        on=["k"], spine_ts="ts", feature_ts="fts", feature_cols=["v"],
+        direction=direction, tolerance=tolerance,
+    )
+    got = {
+        strategy: sorted(
+            map(repr, asof_join(spine, feats, strategy=strategy, **kw).collect())
+        )
+        for strategy in ("union", "broadcast")
+    }
+    assert got["union"] == got["broadcast"]
+    assert len(got["union"]) == len(spine_rows)

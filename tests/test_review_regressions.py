@@ -77,6 +77,27 @@ class TestAsofAtomicRows:
         b = sorted(map(tuple, asof_join(spine, feats, strategy="broadcast", **kw).collect()))
         assert u == b
 
+    @pytest.mark.parametrize("direction", ["backward", "forward"])
+    def test_spine_doubles_pass_through_bit_for_bit(self, spark, direction):
+        """Spine columns are passed through, never regrouped: a grouping
+        key would normalise -0.0 to 0.0 (and canonicalise NaN), so both
+        strategies must return the spine's doubles exactly as given."""
+        feats = spark.createDataFrame(
+            [(1, _h(0), 1.0), (2, _h(5), 2.0)], "k long, fts timestamp, v double"
+        )
+        spine = spark.createDataFrame(
+            [(1, _h(1), -0.0), (2, _h(1), float("nan")), (3, _h(1), -0.0)],
+            "k long, ts timestamp, x double",
+        )
+        kw = dict(
+            on=["k"], spine_ts="ts", feature_ts="fts", feature_cols=["v"],
+            direction=direction,
+        )
+        for strategy in ("union", "broadcast"):
+            out = asof_join(spine, feats, strategy=strategy, **kw).collect()
+            got = {r["k"]: repr(r["x"]) for r in out}
+            assert got == {1: "-0.0", 2: "nan", 3: "-0.0"}, strategy
+
 
 class TestCheckpointLifecycle:
     @pytest.fixture()

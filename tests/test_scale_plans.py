@@ -1073,3 +1073,77 @@ def test_metric_cum_minmax_windows_over_aggregated_frame(spark):
     for w in win_sections:
         head = w.split("\n", 1)[0]
         assert not _re.search(r"\bsum\(", head.lower()), head
+
+
+# ---------------------------------------------------------------------------
+# Broadcast as-of join: the spine passes through a map-side probe
+# ---------------------------------------------------------------------------
+
+def _plan_nodes(node):
+    """Every physical operator under ``node``, looking through the AQE
+    wrapper and into query stages; a BroadcastExchange subtree (the
+    small, broadcast side) is yielded but not entered."""
+    yield node
+    name = node.nodeName()
+    if name == "BroadcastExchange":
+        return
+    if name == "AdaptiveSparkPlan":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStage"):
+        kids = [node.plan()]
+    else:
+        ch = node.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    for k in kids:
+        yield from _plan_nodes(k)
+
+
+def test_broadcast_asof_dataset_never_shuffles_or_regroups_the_spine(
+    fs, spark, tmp_path
+):
+    """A dataset over a broadcast-strategy FV: the spine's rows are
+    probed against the broadcast candidate arrays and passed through.
+    Outside the broadcast side there is no shuffle, no aggregate keyed by
+    a spine column and no synthetic row id."""
+    import datetime as dt
+
+    from dbt_snowflake_feature_store_spark import Entity, FeatureView
+
+    base = dt.datetime(2024, 1, 1)
+    feats = spark.createDataFrame(
+        [
+            (u, base + dt.timedelta(hours=h), float(u * h))
+            for u in range(4)
+            for h in range(3)
+        ],
+        "user_id long, fts timestamp, f_v double",
+    )
+    # a parquet scan carries a size estimate, so `auto` picks broadcast
+    feats.write.parquet(str(tmp_path / "feats"))
+    feats = spark.read.parquet(str(tmp_path / "feats"))
+    fs.register_entity(Entity("user", ["user_id"]))
+    fv = fs.register_feature_view(
+        FeatureView("small_fv", ["user"], df=feats, timestamp_col="fts"), "1"
+    )
+    spine = spark.createDataFrame(
+        [
+            (i, i % 5, base + dt.timedelta(hours=i % 4), -0.0, i % 2)
+            for i in range(20)
+        ],
+        "event_id long, user_id long, event_time timestamp, x double, label int",
+    )
+    df = fs.dataset_df(spine, [fv], spine_timestamp_col="event_time")
+    assert len(df.collect()) == 20  # also finalises the adaptive plan
+    plan = df._jdf.queryExecution().executedPlan()
+    nodes = list(_plan_nodes(plan))
+    names = [n.nodeName() for n in nodes]
+    assert "BroadcastHashJoin" in names
+    assert "BroadcastNestedLoopJoin" not in names
+    assert "Exchange" not in names  # the only shuffle is under the broadcast
+    assert "monotonically_increasing_id" not in plan.toString()
+    spine_only = {"event_id", "event_time", "x", "label"}
+    for n in nodes:
+        if "Aggregate" in n.nodeName():
+            keys = n.groupingExpressions()
+            grouped = {keys.apply(i).name() for i in range(keys.size())}
+            assert not grouped & spine_only, n.toString()

@@ -388,3 +388,52 @@ class TestUIMetadataParserSimulation:
         assert self._ui_parse(repaired["metadata"]) == [
             ("CUSTOMER", ["C_CUSTKEY"])
         ]
+
+
+class TestDatasetSourceBinding:
+    def test_sources_bound_once_per_dataset_and_rebound_next_call(
+        self, fs, spark, tmp_path
+    ):
+        """One dataset plan over two static FVs binds the registered
+        sources once; a source rewritten between two calls is still seen
+        by the next call (nothing is cached across calls)."""
+        import datetime as dt
+
+        base = dt.datetime(2024, 1, 1)
+        path = str(tmp_path / "ev")
+
+        def land(v):
+            spark.createDataFrame(
+                [(1, base, v)], "user_id long, ts timestamp, v double"
+            ).write.mode("overwrite").parquet(path)
+
+        land(1.0)
+        fs.register_source("ev_src", path)
+        fs.register_entity(Entity("user", ["user_id"]))
+        fvs = [
+            fs.register_feature_view(
+                FeatureView(
+                    f"fv{i}", ["user"], timestamp_col="ts",
+                    sql=f"SELECT user_id, ts, v AS f{i} FROM ev_src",
+                ),
+                "1",
+            )
+            for i in range(2)
+        ]
+        calls = []
+        bind = fs._bind_batch_sources
+        fs._bind_batch_sources = lambda: (calls.append(1), bind())[1]
+        spine = spark.createDataFrame(
+            [(1, base)], "user_id long, event_time timestamp"
+        )
+
+        def row():
+            return fs.dataset_df(
+                spine, fvs, spine_timestamp_col="event_time"
+            ).collect()[0]
+
+        first = row()
+        assert len(calls) == 1 and (first["f0"], first["f1"]) == (1.0, 1.0)
+        land(2.0)
+        second = row()
+        assert len(calls) == 2 and (second["f0"], second["f1"]) == (2.0, 2.0)
