@@ -13,7 +13,10 @@ package).
 Spark-first physical design:
 - FULL → batch recompute, atomic overwrite of the FV's Parquet directory.
   Output is partitioned by the date of ``timestamp_col`` when present, so
-  downstream PIT reads prune partitions by time range.
+  downstream PIT reads prune partitions by time range. The write is the
+  only scan: one ``DataFrame.observe`` on the written frame counts its
+  rows (the ``refresh_history`` ROWS) and takes ``max(timestamp_col)``
+  (the new high watermark), so nothing re-reads the table afterwards.
 - INCREMENTAL → when the FV declares a streaming-compatible source
   (``streaming/incremental.py``), a Structured Streaming
   ``trigger(availableNow=True)`` micro-batch run processes only new files
@@ -29,7 +32,7 @@ import json
 import os
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .errors import ValidationError
@@ -70,6 +73,18 @@ def _write_full(
         fs.storage.write_full(df, path, partition_by=part)
 
 
+def _observe(df: DataFrame, ts: str | None) -> tuple[DataFrame, Observation]:
+    """``df`` carrying one observation of what a FULL write writes: its
+    row count (``rows``) and, with a timestamp column, ``max(ts)``
+    (``max_ts``). Read the observation after the write, never before:
+    it is filled by the write's own job."""
+    obs = Observation()
+    stats = [F.count(F.lit(1)).alias("rows")]
+    if ts is not None:
+        stats.append(F.max(F.col(ts)).alias("max_ts"))
+    return df.observe(obs, *stats), obs
+
+
 def _read_watermark(path: str) -> str | None:
     p = os.path.join(path, _WATERMARK_FILE)
     if os.path.exists(p):
@@ -84,8 +99,11 @@ def _write_watermark(path: str, value: str) -> None:
 
 
 def refresh_feature_view(fs: "FeatureStore", fv: "FeatureView", mode: str | None = None) -> str:
-    """Run one refresh. Returns the effective mode used
-    ('FULL' | 'INCREMENTAL' | 'INCREMENTAL_WATERMARK').
+    """Run one refresh and append it to the FV's refresh history. Returns
+    the effective mode used ('FULL' | 'INCREMENTAL' |
+    'INCREMENTAL_WATERMARK'). Rows are recorded only for FULL recomputes,
+    where the write observes them; counting after an incremental refresh
+    would add a whole-table scan per micro-batch.
 
     The FV's ``warehouse`` (feature_view.sql:19-26) routes the refresh
     jobs to the same-named FAIR-scheduler pool for the duration of the
@@ -99,15 +117,18 @@ def refresh_feature_view(fs: "FeatureStore", fv: "FeatureView", mode: str | None
         prev_pool = sc.getLocalProperty("spark.scheduler.pool")
         sc.setLocalProperty("spark.scheduler.pool", wh)
         try:
-            return _refresh_feature_view(fs, fv, mode)
+            effective, rows = _refresh_feature_view(fs, fv, mode)
         finally:
             sc.setLocalProperty("spark.scheduler.pool", prev_pool)
-    return _refresh_feature_view(fs, fv, mode)
+    else:
+        effective, rows = _refresh_feature_view(fs, fv, mode)
+    fs._record_refresh(fv, effective, rows)
+    return effective
 
 
 def _refresh_feature_view(
     fs: "FeatureStore", fv: "FeatureView", mode: str | None = None
-) -> str:
+) -> tuple[str, int | None]:
     mode = (mode or fv.refresh.refresh_mode or "AUTO").upper()
     path = fs._fv_data_path(fv.name, fv.version)
 
@@ -125,6 +146,7 @@ def _refresh_feature_view(
                 f"Bucketed feature view '{fv.logical_name}': no entity "
                 "join keys found in the plan output to bucket by"
             )
+        df, obs = _observe(df, None)
         fs.storage.write_bucketed(
             fs.spark,
             df,
@@ -134,7 +156,7 @@ def _refresh_feature_view(
             bucket_cols=keys,
             sort_cols=keys + ([ts] if ts else []),
         )
-        return "FULL"
+        return "FULL", obs.get["rows"]
 
     if mode in ("INCREMENTAL", "AUTO"):
         # preferred: Structured Streaming availableNow over registered
@@ -143,7 +165,7 @@ def _refresh_feature_view(
         from .streaming.incremental import StreamingNotSupported, incremental_refresh
 
         try:
-            return incremental_refresh(fs, fv)
+            return incremental_refresh(fs, fv), None
         except StreamingNotSupported:
             if mode == "INCREMENTAL":
                 # explicit INCREMENTAL may still use the batch
@@ -210,7 +232,7 @@ def _refresh_feature_view(
             new_wm = _max_ts(fs, path, "_fs_dt", ts)
             if new_wm:
                 _write_watermark(path, new_wm)
-            return "INCREMENTAL_WATERMARK"
+            return "INCREMENTAL_WATERMARK", None
 
     # batch FULL recompute: any streaming checkpoint is now stale (the
     # overwrite killed the sink's file log / superseded the merged
@@ -224,12 +246,12 @@ def _refresh_feature_view(
     for stale in (path + "_ckpt", path + "_ckpt_merge"):
         if os.path.isdir(stale):
             shutil.rmtree(stale)
+    df, obs = _observe(df, ts)
     _write_full(fs, df, path, ts, cluster_by=fv.cluster_by)
-    if ts is not None:
-        new_wm = _max_ts(fs, path, "_fs_dt", ts)
-        if new_wm:
-            _write_watermark(path, new_wm)
-    return "FULL"
+    seen = obs.get
+    if seen.get("max_ts") is not None:
+        _write_watermark(path, str(seen["max_ts"]))
+    return "FULL", seen["rows"]
 
 
 def _merge_keys(fs: "FeatureStore", fv: "FeatureView", df: DataFrame) -> list[str]:

@@ -10,6 +10,8 @@ the same names. Parquet scans get predicate pushdown, column pruning and
 from __future__ import annotations
 
 import os
+import threading
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,26 +116,36 @@ def normalize_frame(
     return df
 
 
-# (applicationId, session id, path, file signature) → resolved source
-# PLAN. This is a METADATA cache, not a result cache: the cached object
-# is the analyzed DataFrame (logical plan + parquet file index +
+# (applicationId, session id, path, variant, file signature) → resolved
+# source PLAN. This is a METADATA cache, not a result cache: the cached
+# object is the analyzed DataFrame (logical plan + file index +
 # footer-driven timestamp normalization) — every action against it still
-# scans the parquet inputs. It is the session-scoped equivalent of
-# Spark's own file-listing cache
-# (spark.sql.hive.filesourcePartitionFileCacheSize — the guide-§6
-# posture: re-listing/re-inferring the same immutable source on every
-# operator call is pure driver latency, ~0.1 s per call here, paid
-# inside every benched query). Freshness is guaranteed by the file
-# signature (name, mtime_ns, size of every parquet part, RECURSIVE over
-# subdirectories so a partitioned layout's nested part rewrite changes
-# the key — ADVICE r17): any rewrite of the path produces a new key, so
-# in-session test fixtures that overwrite their tmp tables never see a
-# stale plan. The key carries the SESSION identity (ADVICE r17: the
-# app_id-only key handed a sibling session in the same application a
-# frame bound to another session); the value holds a strong session ref
-# so the id can never be reused while the entry lives. Entries from
-# dead applications are evicted on every lookup (the _PAIR_CACHE
-# discipline).
+# scans the inputs. It is the session-scoped equivalent of Spark's own
+# file-listing cache (spark.sql.hive.filesourcePartitionFileCacheSize —
+# the guide-§6 posture: re-listing/re-inferring the same immutable source
+# on every call is pure driver latency, ~0.1 s per load here). Callers:
+#   * read_table (variant "read_table");
+#   * FeatureStore._bind_batch_sources, once per registered source
+#     (variant = format, schema, options, so re-registering a source
+#     rebinds) and once per materialized feature view (variant = the
+#     table format). A bind re-creates its temp views on every call; only
+#     the loads are shared.
+# Direct FeatureStore._load_source callers (freshness, schema tests, the
+# manifest, the streaming fallback) stay uncached: they use the frame
+# through the DataFrame API, where two reads sharing one analyzed plan
+# would turn a same-source join into a self-join. Temp-view SQL
+# de-duplicates relations, so the binds are safe to share.
+# Freshness is guaranteed by the file signature (name, mtime_ns, size of
+# every file, RECURSIVE over subdirectories so a partitioned layout's
+# nested part rewrite changes the key — ADVICE r17): any rewrite of the
+# path, or a part landed beside the others, produces a new key, so no
+# stale plan is ever served. A path that is not a local file or
+# directory has no signature and is never cached. The key carries the
+# SESSION identity (ADVICE r17: the app_id-only key handed a sibling
+# session in the same application a frame bound to another session); the
+# value holds a strong session ref so the id can never be reused while
+# the entry lives. Entries from dead applications are evicted on every
+# lookup (the _PAIR_CACHE discipline).
 #
 # Shared-lineage caveat (documented per ADVICE r17): two read_table
 # calls for the same (session, path) return the SAME analyzed frame —
@@ -144,13 +156,19 @@ def normalize_frame(
 # follows for genuinely shared lineage; test_scale_plans pins that the
 # plain `join(..., on="key")` spelling stays resolvable.
 _READ_CACHE: dict[tuple, tuple] = {}
+_READ_LOCK = threading.Lock()
 
 
 def _path_signature(path: str):
+    """(relative name, mtime_ns, size) of every file under ``path``, or
+    None — "do not cache" — when ``path`` is not a local file or
+    directory (a remote URI, a missing path) or cannot be listed."""
     try:
         if os.path.isfile(path):
             st = os.stat(path)
             return ((os.path.basename(path), st.st_mtime_ns, st.st_size),)
+        if not os.path.isdir(path):
+            return None
         entries = []
         for root, dirs, files in os.walk(path):
             dirs.sort()  # deterministic walk order
@@ -165,6 +183,35 @@ def _path_signature(path: str):
         return None
 
 
+def cached_frame(
+    spark: SparkSession, path: str, load: Callable[[], DataFrame], variant
+) -> DataFrame:
+    """``load()``'s frame for ``path``, reused while no file under the
+    path changes (see _READ_CACHE). ``variant`` separates callers that
+    load the same path differently."""
+    app_id = spark.sparkContext.applicationId
+    # signature BEFORE the load: a file changing while it loads leaves
+    # the entry under the old signature, so the next call reloads
+    sig = _path_signature(path)
+    scope = (app_id, id(spark), path, variant)
+    with _READ_LOCK:
+        for k in [k for k in _READ_CACHE if k[0] != app_id]:
+            del _READ_CACHE[k]
+        cached = None if sig is None else _READ_CACHE.get(scope + (sig,))
+    # identity check is belt-and-braces: the strong ref in the value
+    # pins id(spark) against reuse, so a hit is always this session
+    if cached is not None and cached[0] is spark:
+        return cached[1]
+    df = load()  # outside the lock: a load runs Spark jobs
+    if sig is not None:
+        with _READ_LOCK:
+            # drop superseded signatures of the same scope
+            for k in [k for k in _READ_CACHE if k[:4] == scope]:
+                del _READ_CACHE[k]
+            _READ_CACHE[scope + (sig,)] = (spark, df)
+    return df
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one source table; normalizes event-time columns to UTC
     TIMESTAMP whether the file stores ns-int64 or timestamp[us]/NTZ.
@@ -176,32 +223,16 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _READ_CACHE if k[0] != app_id]:
-        del _READ_CACHE[k]
-    sig = _path_signature(path)
-    key = (app_id, id(spark), path, sig)
-    if sig is not None:
-        cached = _READ_CACHE.get(key)
-        # identity check is belt-and-braces: the strong ref in the value
-        # pins id(spark) against reuse, so a hit is always this session
-        if cached is not None and cached[0] is spark:
-            return cached[1]
-    df = spark.read.parquet(path)
-    df = normalize_frame(
-        df, path=path, ns_allowlist=_EVENT_TS_COLS.get(name, ()), table=name
-    )
-    if sig is not None:
-        # drop superseded signatures of the same (session, path) before
-        # inserting
-        for k in [
-            k
-            for k in _READ_CACHE
-            if k[0] == app_id and k[1] == id(spark) and k[2] == path
-        ]:
-            del _READ_CACHE[k]
-        _READ_CACHE[key] = (spark, df)
-    return df
+
+    def load() -> DataFrame:
+        return normalize_frame(
+            spark.read.parquet(path),
+            path=path,
+            ns_allowlist=_EVENT_TS_COLS.get(name, ()),
+            table=name,
+        )
+
+    return cached_frame(spark, path, load, "read_table")
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

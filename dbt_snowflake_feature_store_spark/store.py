@@ -20,6 +20,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+from functools import partial
 from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -241,10 +242,37 @@ class FeatureStore:
         )
         return normalize_frame(df, path=probe, table=doc.get("name", "?"))
 
+    def _load_materialized(self, path: str) -> DataFrame:
+        df = self.storage.read(self.spark, path)
+        # drop the internal date-partition column (refresh.py) — it
+        # exists for partition pruning, not for users
+        return df.drop("_fs_dt") if "_fs_dt" in df.columns else df
+
     def _bind_batch_sources(self) -> None:
+        """(Re-)create the temp views FV SQL resolves against: one per
+        registered source, by name, and one per materialized managed FV,
+        by physical name. The loads go through the session's signature
+        cache (``sources.tables.cached_frame``): a source or
+        materialization whose files have not changed since the last bind
+        reuses its analyzed frame, so registering N views over S sources
+        costs S loads, not N·S. Any file landed, rewritten or removed
+        under a path — or a source re-registered with another path,
+        format, schema or options — loads afresh, so nothing stale is
+        served. The views themselves are re-created on every call: their
+        names are session-global and must point at this store."""
+        from .sources.tables import cached_frame
+
         for doc in self.registry.list("sources"):
+            variant = (
+                "source",
+                doc.get("format", "parquet"),
+                doc.get("schema"),
+                json.dumps(doc.get("options") or {}, sort_keys=True, default=str),
+            )
             try:
-                df = self._load_source(doc)
+                df = cached_frame(
+                    self.spark, doc["path"], partial(self._load_source, doc), variant
+                )
                 df.createOrReplaceTempView(doc["name"])
             except Exception:
                 # a broken source must not block FVs that don't reference
@@ -258,16 +286,25 @@ class FeatureStore:
         # materialized data is bound, never a re-planned SQL body.
         for doc in self.registry.list("feature_views"):
             path = doc.get("data_path")
-            if path and os.path.isdir(path):
-                try:
-                    df = self.storage.read(self.spark, path)
-                    if "_fs_dt" in df.columns:
-                        df = df.drop("_fs_dt")
-                    df.createOrReplaceTempView(
-                        physical_fv_name(doc["name"], doc["version"])
-                    )
-                except Exception:
+            if not path:
+                continue
+            try:
+                # repair an interrupted snapshot swap BEFORE the
+                # signature is taken — a hit must not outlive it
+                self.storage.recover(path)
+                if not os.path.isdir(path):
                     continue
+                df = cached_frame(
+                    self.spark,
+                    path,
+                    partial(self._load_materialized, path),
+                    ("feature_view", self.storage.name),
+                )
+                df.createOrReplaceTempView(
+                    physical_fv_name(doc["name"], doc["version"])
+                )
+            except Exception:
+                continue
 
     # ------------------------------------------------------------------
     # Feature views (feature_view.sql materialization)
@@ -570,10 +607,7 @@ class FeatureStore:
             # check — a crash between swap renames leaves no target dir
             self.storage.recover(path)
             if os.path.isdir(path):
-                df = self.storage.read(self.spark, path)
-                # drop the internal date-partition column (refresh.py) —
-                # it exists for partition pruning, not for users
-                return df.drop("_fs_dt") if "_fs_dt" in df.columns else df
+                return self._load_materialized(path)
             if fv.refresh.initialize == "ON_SCHEDULE":
                 raise ValidationError(
                     f"Managed feature view '{fv.logical_name}' has not been "
@@ -765,18 +799,7 @@ class FeatureStore:
             raise ValidationError(
                 f"Feature view '{fv.logical_name}' is SUSPENDED; resume it first"
             )
-        effective = refresh_feature_view(self, fv, mode=mode)
-        # row count is recorded only for FULL recomputes (bounded by the
-        # rewrite that just happened); counting after an incremental
-        # refresh would add a whole-table scan per micro-batch
-        n = None
-        if effective == "FULL":
-            try:
-                n = self.read_feature_view(fv).count()
-            except Exception:
-                n = None
-        self._record_refresh(fv, effective, n)
-        return effective
+        return refresh_feature_view(self, fv, mode=mode)
 
     def suspend_feature_view(self, name: str, version: str) -> FeatureView:
         """Pause a managed FV's refreshes (snowflake-ml

@@ -5009,3 +5009,45 @@ unit_tests:
         load_project(fs, proj)
         with pytest.raises(ValidationError, match="Duplicate unit test"):
             export_manifest(fs, proj)
+
+
+_YAML_FIXTURE = """\
+defaults: &defaults
+  materialized: feature_view
+  tags: [a, b]
+  on: yes
+models:
+  - name: m1
+    <<: *defaults
+    meta: {created: 2024-01-31, at: 2024-01-31 10:20:30, flag: on, off_flag: off}
+    columns:
+      - name: c1
+        tests: [not_null, {accepted_values: {values: [1, 2.5, ~, "x"]}}]
+      - name: c2
+        nested: [[1, [2, 3]], {k: [yes, no, null]}]
+  - name: m2
+    <<: *defaults
+    text: |
+      multi
+      line
+"""
+
+
+@pytest.mark.parametrize("source", ["metric_yml", "fixture"])
+def test_c_and_python_yaml_loaders_build_equal_objects(source):
+    """``_load_yaml`` takes libyaml's C loader when PyYAML has it; it must
+    build exactly what the pure-Python SafeLoader builds."""
+    import io
+
+    yaml = pytest.importorskip("yaml")
+    from dbt_snowflake_feature_store_spark.models import _load_yaml
+    from dbt_snowflake_feature_store_spark.operators.feature_queries import (
+        _METRIC_YML,
+    )
+
+    text = _METRIC_YML if source == "metric_yml" else _YAML_FIXTURE
+    expected = yaml.load(text, Loader=yaml.SafeLoader)
+    assert expected and _load_yaml(io.StringIO(text)) == expected
+    if not yaml.__with_libyaml__:
+        pytest.skip("PyYAML built without libyaml")
+    assert yaml.load(text, Loader=yaml.CSafeLoader) == expected

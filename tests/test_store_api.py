@@ -396,7 +396,7 @@ class TestDatasetSourceBinding:
     ):
         """One dataset plan over two static FVs binds the registered
         sources once; a source rewritten between two calls is still seen
-        by the next call (nothing is cached across calls)."""
+        by the next call (nothing stale is served)."""
         import datetime as dt
 
         base = dt.datetime(2024, 1, 1)
