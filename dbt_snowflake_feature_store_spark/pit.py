@@ -7,10 +7,24 @@ feature row with the greatest ``feature_ts <= spine_ts`` per entity key;
 spine rows with no prior feature row get NULL features; every spine row is
 preserved exactly once.
 
-Spark has no native batch as-of join, so we provide two strategies and pick
-by size:
+Spark has no native batch as-of join. ``strategy='auto'`` chooses among
+three plans by Catalyst's size estimates:
 
-``union`` (default, the 100 TB scale path)
+``broadcast`` (feature side at most ``broadcast_threshold`` bytes)
+    The feature side is reduced to one candidate array per key,
+    broadcast, and probed by an equi-join; a fold over the key's array
+    picks each spine row's feature row. The spine is never shuffled or
+    regrouped. Also available by request.
+
+spine-bounded ``broadcast`` (feature side above the threshold, spine
+at most the threshold, both plans deterministic)
+    A key-only pass first cuts the feature side down to the rows that
+    can win (``_spine_bounded``): per key, the latest feature ts inside
+    each gap between consecutive spine timestamps. Only those rows, and
+    the rows tied with them, reach the broadcast fold. The full feature
+    payload is never shuffled or sorted.
+
+``union`` (otherwise; the 100 TB scale path)
     Tag spine and feature rows, ``unionByName``, then one window
     ``partitionBy(keys).orderBy(ts, is_spine)`` with
     ``last(feature_col, ignorenulls=True)`` carrying features forward onto
@@ -18,16 +32,12 @@ by size:
     a key with f feature rows and s spine rows costs O(f+s), not O(f*s)
     like the join+filter formulation. Ties (feature_ts == spine_ts) are
     included because feature rows order before spine rows at equal ts.
+    It also serves ``direction='nearest'`` and the ``salt`` hot-key split.
 
-``broadcast``
-    When the feature side is small (a dimension-sized FV), it is reduced to
-    one candidate array per key, broadcast, and probed by an equi-join; a
-    fold over the key's array picks each spine row's feature row. The
-    spine is never shuffled or regrouped. Used automatically when the
-    feature side is below ``broadcast_threshold`` bytes (when statistics
-    are available) or when requested explicitly.
+Every strategy breaks an exact (key, ts) tie the same way
+(``latest_order``), and so do the store's latest-row snapshots.
 
-Both are pure DataFrame compositions — Catalyst/AQE handle partition
+All three are pure DataFrame compositions — Catalyst/AQE handle partition
 coalescing and skew splitting (SURVEY.md §4.2-4.3).
 """
 
@@ -55,6 +65,39 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # pragma: no cover - py4j edge
         return None
+
+
+def _deterministic(df: DataFrame) -> bool:
+    return bool(df._jdf.queryExecution().optimizedPlan().deterministic())
+
+
+def latest_order(ts: str, cols: Sequence[str]) -> Column:
+    """What "latest row" means everywhere: the feature ts, then the
+    ``xxhash64`` of ``struct(ts, *cols)`` to break an exact (key, ts) tie.
+    The greatest keeps the row every as-of strategy attaches."""
+    return F.struct(
+        F.col(ts).alias("t"),
+        F.xxhash64(F.struct(F.col(ts), *[F.col(c) for c in cols])).alias("h"),
+    )
+
+
+def latest_per_key(
+    df: DataFrame, on: Sequence[str], ts: str, cols: Sequence[str]
+) -> DataFrame:
+    """``on`` and ``cols`` of each key's latest row by ``latest_order``:
+    the row an as-of join attaches to a spine ts at or after the key's
+    last feature ts. One ``max`` over ``(order, row)`` structs (cheaper
+    than ``max_by``: one buffer column), no window sort; a NULL-ts row
+    is never the latest."""
+    row = F.struct(
+        latest_order(ts, [c for c in cols if c != ts]).alias("o"),
+        F.struct(*[F.col(c) for c in cols]).alias("r"),
+    )
+    return (
+        df.groupBy(*on)
+        .agg(F.max(F.when(F.col(ts).isNotNull(), row)).alias("__fs_latest"))
+        .select(*on, *[F.col(f"__fs_latest.r.{c}").alias(c) for c in cols])
+    )
 
 
 def asof_join(
@@ -85,8 +128,12 @@ def asof_join(
         column that is neither a key nor the feature timestamp.
     strategy : 'auto' (default) picks 'broadcast' when Catalyst's size
         estimate for the feature side is under ``broadcast_threshold``
-        (dimension-sized FV → no shuffle of the spine at all), else
-        'union' (single-shuffle scale path). Both can be forced.
+        (dimension-sized FV → no shuffle of the spine at all). Above it,
+        a spine under the threshold first cuts the feature side down to
+        the rows that can win, then takes the broadcast fold (both plans
+        must be deterministic: each side is read twice). Otherwise
+        'union' (single-shuffle scale path). 'broadcast' and 'union' can
+        be forced; a forced 'broadcast' never reduces.
     tolerance : optional max lookback (backward) / lookahead (forward) as
         an INTERVAL string (e.g. '30 days'); rows outside yield NULLs.
     direction : 'backward' (default) attaches the greatest
@@ -131,12 +178,18 @@ def asof_join(
         if direction == "nearest":
             strategy = "union"
         else:
-            sz = _plan_size_bytes(features)
-            strategy = (
-                "broadcast"
-                if sz is not None and 0 < sz <= broadcast_threshold
-                else "union"
-            )
+            def small(df: DataFrame) -> bool:
+                sz = _plan_size_bytes(df)
+                return sz is not None and 0 < sz <= broadcast_threshold
+
+            strategy = "union"
+            if small(features):
+                strategy = "broadcast"
+            elif small(spine) and _deterministic(spine) and _deterministic(features):
+                features = _spine_bounded(
+                    spine, features, on, spine_ts, feature_ts, direction
+                )
+                strategy = "broadcast"
 
     if strategy == "union":
         return _asof_union(
@@ -148,6 +201,47 @@ def asof_join(
             spine, features, on, spine_ts, feature_ts, feature_cols, tolerance, direction
         )
     raise ValidationError(f"Unknown as-of strategy: {strategy!r}")
+
+
+def _spine_bounded(
+    spine: DataFrame,
+    features: DataFrame,
+    on: list[str],
+    spine_ts: str,
+    feature_ts: str,
+    direction: str,
+) -> DataFrame:
+    """The feature rows that can win a backward (forward) as-of join
+    against ``spine``: per key, the latest (earliest) feature ts in each
+    interval ``(previous spine ts, m]`` (``[m, next spine ts)``) of the
+    key's distinct spine timestamps ``m``, with every row tied with it on
+    (key, ts). The winner for spine ts ``m`` is the latest feature ts at
+    or before ``m``; nothing lies between it and ``m``, so it is the
+    latest of its own interval. The fold still applies the tolerance and
+    the hash tiebreak. Key-only passes: the spine's marks are shuffled,
+    the feature side is range-joined (as key and ts only) against the
+    broadcast intervals, aggregated to one ts per interval and
+    semi-joined back. Per feature row this costs O(distinct spine
+    timestamps of its key), the bound of the fold itself."""
+    back = direction == "backward"
+    m, edge, t = "__fs_m", "__fs_bound", "__fs_t"
+    marks = spine.select(*on, F.col(spine_ts).alias(m)).dropna().distinct()
+    w = Window.partitionBy(*on).orderBy(m)
+    intervals = marks.withColumn(edge, (F.lag if back else F.lead)(m).over(w))
+    keys = features.select(*on, F.col(feature_ts).alias(t)).dropna()
+    inside = (
+        (F.col(edge).isNull() | (F.col(t) > F.col(edge))) & (F.col(t) <= F.col(m))
+        if back
+        else (F.col(t) >= F.col(m)) & (F.col(edge).isNull() | (F.col(t) < F.col(edge)))
+    )
+    best = (
+        keys.join(F.broadcast(intervals), on)
+        .where(inside)
+        .groupBy(*on, m)
+        .agg((F.max if back else F.min)(t).alias(feature_ts))
+        .drop(m)
+    )
+    return features.join(F.broadcast(best), [*on, feature_ts], "leftsemi")
 
 
 def _asof_union(
@@ -467,9 +561,9 @@ def _asof_broadcast(
     tolerance: str | None,
     direction: str = "backward",
 ) -> DataFrame:
-    """Map-side as-of for small feature sides. The feature side is reduced
-    to ONE row per key holding every candidate as ``(k=(t, h), r)`` —
-    feature ts, the union strategy's struct-hash tiebreak, the row — so
+    """Map-side as-of for small (or spine-bounded) feature sides. The
+    feature side is reduced to ONE row per key holding every candidate
+    as ``(k=(t, h), r)`` — ``latest_order``, the row — so
     the spine probes it with a broadcast EQUI-join and folds its key's
     array to the winner: the in-range candidate with the greatest (least,
     forward) ``(t, h)``, the row the union strategy picks. Spine rows pass
@@ -478,12 +572,9 @@ def _asof_broadcast(
     matches nothing. Per spine row the fold costs O(feature rows of its
     key), never more than the rows a range join would materialise."""
     spine_cols = spine.columns
-    key = F.struct(
-        F.col(feature_ts).alias("t"),
-        F.xxhash64(F.struct(F.col(feature_ts), *feature_cols)).alias("h"),
-    )
     cand = F.struct(
-        key.alias("k"), F.struct(*[F.col(c).alias(c) for c in feature_cols]).alias("r")
+        latest_order(feature_ts, feature_cols).alias("k"),
+        F.struct(*[F.col(c).alias(c) for c in feature_cols]).alias("r"),
     )
     cands = (
         features.filter(F.col(feature_ts).isNotNull())

@@ -1188,8 +1188,9 @@ class FeatureStore:
         """Materialize the LATEST feature row per entity key into a
         compact serving table — the offline→online sync every feature
         store performs so request-path lookups never scan history. The
-        snapshot is ONE hash aggregate (``max_by`` over the feature
-        struct keyed on the FV's timestamp column — no window sort; the
+        snapshot is ONE aggregate (``pit.latest_per_key``: the timestamp,
+        then the as-of join's tiebreak hash, so an exact (key, ts) tie
+        serves the row training attaches; no window sort; the
         q_fv_latest_snapshot plan shape), written through the store's
         crash-safe TableFormat swap. Timeless FVs export as-is (their
         body already has one row per key by the spine-invariant
@@ -1202,22 +1203,8 @@ class FeatureStore:
         if fv.timestamp_col:
             ts_map = {c.upper(): c for c in df.columns}
             ts_col = ts_map[canonical_name(fv.timestamp_col)]
-            feature_cols = [c for c in df.columns if c not in join_keys]
-            snap = (
-                df.groupBy(*join_keys)
-                .agg(
-                    F.max_by(
-                        F.struct(*[F.col(c) for c in feature_cols]),
-                        F.col(ts_col),
-                    ).alias("__fs_latest")
-                )
-                .select(
-                    *join_keys,
-                    *[
-                        F.col(f"__fs_latest.{c}").alias(c)
-                        for c in feature_cols
-                    ],
-                )
+            snap = pit.latest_per_key(
+                df, join_keys, ts_col, [c for c in df.columns if c not in join_keys]
             )
         else:
             snap = df
@@ -2104,19 +2091,11 @@ class FeatureStore:
             )
         if fv.timestamp_col and not spine_timestamp_col:
             # timestamped FV, timeless spine → join the LATEST snapshot per
-            # key (max_by over the feature struct: one hash aggregate, no
-            # window sort). A plain equi-join would duplicate spine rows —
-            # violating the spine row-count invariant
+            # key (one aggregate, no window sort; ties broken as the as-of
+            # join breaks them). A plain equi-join would duplicate spine
+            # rows — violating the spine row-count invariant
             # (test_feature_store_workflows.py:143).
-            latest = fv_df.groupBy(*join_keys).agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in feature_cols]), F.col(ts_col)
-                ).alias("__fs_latest")
-            )
-            latest = latest.select(
-                *join_keys,
-                *[F.col(f"__fs_latest.{c}").alias(c) for c in feature_cols],
-            )
+            latest = pit.latest_per_key(fv_df, join_keys, ts_col, feature_cols)
             return spine.join(latest, on=join_keys, how="left")
         return spine.join(
             fv_df.select(*join_keys, *feature_cols), on=join_keys, how="left"

@@ -185,6 +185,43 @@ def test_export_matches_retrieve_latest_semantics(fs, spark, fv_with_history):
     assert online == served
 
 
+def test_exact_ts_tie_serves_the_row_training_attaches(fs, spark, tmp_path):
+    """Six rows share one (key, ts). The row both as-of strategies attach
+    is the one a timeless-spine retrieve and the online export keep: all
+    four paths order "latest" by ts, then the same struct hash."""
+    import datetime as dt
+
+    from dbt_snowflake_feature_store_spark import asof_join
+
+    t = dt.datetime(2024, 1, 1)
+    path = str(tmp_path / "tied.parquet")
+    spark.createDataFrame(
+        [(1, t - dt.timedelta(days=1), -1.0)] + [(1, t, float(v)) for v in range(6)],
+        "cust_id INT, ts TIMESTAMP, v DOUBLE",
+    ).coalesce(1).write.parquet(path)  # one file: a fixed arrival order
+    fs.register_source("tied", path)
+    fs.register_entity(Entity(name="cust", join_keys=["cust_id"]))
+    fv = fs.register_feature_view(
+        FeatureView("tied_fv", ["cust"], sql="SELECT cust_id, ts, v FROM tied",
+                    timestamp_col="ts"),
+        version="1.0",
+    )
+    feats = spark.read.parquet(path)
+    spine = spark.createDataFrame([(1, t)], "cust_id INT, event_time TIMESTAMP")
+    got = {
+        s: asof_join(spine, feats, ["cust_id"], "event_time", "ts", ["v"],
+                     strategy=s).collect()[0]["v"]
+        for s in ("union", "broadcast")
+    }
+    got["timeless"] = fs.retrieve_feature_values(
+        spark.createDataFrame([(1,)], "cust_id INT"), [fv]
+    ).collect()[0]["v"]
+    fs.export_online_store("tied_fv", "1.0")
+    got["online"] = fs.read_online("tied_fv", "1.0").collect()[0]["v"]
+    assert len(set(got.values())) == 1, got
+    assert got["union"] >= 0.0  # a tied row at t, never the older one
+
+
 def test_retrieve_online_features_batch_join(fs, spark, fv_with_history):
     fs.export_online_store("spend_fv", "1.0")
     spine = spark.createDataFrame([(1,), (2,), (7,)], "cust_id INT")

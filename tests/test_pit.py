@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbt_snowflake_feature_store_spark import Entity, FeatureView, asof_join
+from dbt_snowflake_feature_store_spark.pit import _plan_size_bytes
 
 BASE = dt.datetime(2024, 6, 30, 12, 0, 0)
 
@@ -296,6 +297,68 @@ class TestAsofJoin:
         assert sorted(tuple(r) for r in auto.collect()) == sorted(
             tuple(r) for r in forced_union.select(auto.columns).collect()
         )
+
+    @pytest.fixture()
+    def sized(self, spark, tmp_path):
+        """A parquet spine far smaller than its parquet feature side, and
+        a threshold between their file-size estimates. Feature rows every
+        15 minutes from 40 days back, so both directions find rows."""
+        spark.createDataFrame(
+            [(c, _days_back(b), c % 2) for c in range(10) for b in (7, 3)],
+            "customer_id long, event_time timestamp, label int",
+        ).coalesce(1).write.parquet(str(tmp_path / "spine"))
+        spark.range(4000).select(
+            (F.col("id") % 10).alias("customer_id"),
+            (F.lit(_days_back(40)) + F.make_interval(mins=F.col("id") * 15)).alias(
+                "updated_at"
+            ),
+            F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+        ).write.parquet(str(tmp_path / "feats"))
+        sp = spark.read.parquet(str(tmp_path / "spine"))
+        ft = spark.read.parquet(str(tmp_path / "feats"))
+        lo, hi = _plan_size_bytes(sp), _plan_size_bytes(ft)
+        assert 0 < 4 * lo < hi
+        return sp, ft, 2 * lo
+
+    @staticmethod
+    def _plan(df) -> str:
+        df.count()  # finalises the adaptive plan
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def test_auto_bounds_a_large_feature_side_by_a_small_spine(self, sized):
+        """Feature side above the gate, spine under it: the feature side
+        is cut down and broadcast-folded. No union, and the only window
+        is the spine marks' (it never sees a feature column)."""
+        spine, feats, gate = sized
+        kw = dict(on=["customer_id"], spine_ts="event_time",
+                  feature_ts="updated_at")
+        for direction in ("backward", "forward"):
+            auto = asof_join(spine, feats, broadcast_threshold=gate,
+                             direction=direction, **kw)
+            plan = self._plan(auto)
+            assert "Union" not in plan and "LeftSemi" in plan, plan[:3000]
+            windows = [ln for ln in plan.splitlines() if "Window [" in ln]
+            assert windows and not any("payload" in ln for ln in windows)
+            union = asof_join(spine, feats, strategy="union",
+                              direction=direction, **kw)
+            got = sorted(map(tuple, auto.collect()))
+            assert got == sorted(map(tuple, union.collect()))
+            assert all(r[-1] is not None for r in got)
+
+    def test_auto_unions_when_the_spine_is_large_or_random(self, sized):
+        """The other sides of the gate: a threshold of 0 (spine too large)
+        and a nondeterministic spine, which a reduction would read twice,
+        both take the union plan."""
+        spine, feats, gate = sized
+        kw = dict(on=["customer_id"], spine_ts="event_time",
+                  feature_ts="updated_at")
+        assert "Union" in self._plan(
+            asof_join(spine, feats, broadcast_threshold=0, **kw)
+        )
+        rnd = spine.withColumn("r", F.rand(seed=3))
+        assert _plan_size_bytes(rnd) <= gate
+        plan = self._plan(asof_join(rnd, feats, broadcast_threshold=gate, **kw))
+        assert "Union" in plan and "LeftSemi" not in plan
 
     def test_tolerance_cuts_stale_features(self, spark, snapshots, spine):
         out = asof_join(

@@ -12,7 +12,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from dbt_snowflake_feature_store_spark import asof_join
+from dbt_snowflake_feature_store_spark import asof_join, pit
 
 BASE = dt.datetime(2024, 1, 1)
 
@@ -258,7 +258,7 @@ def parity_case(draw):
 )
 @given(case=parity_case())
 def test_broadcast_and_union_strategies_agree(spark, direction, tolerance, case):
-    """Both sides of the ``auto`` size gate return identical rows: the
+    """Every side of the ``auto`` size gate returns identical rows: the
     same tied row wins an exact (key, ts) tie, and NULL keys, NULL
     timestamps and keys without features attach nothing either way."""
     spine_rows, feat_rows = case
@@ -283,5 +283,13 @@ def test_broadcast_and_union_strategies_agree(spark, direction, tolerance, case)
         )
         for strategy in ("union", "broadcast")
     }
-    assert got["union"] == got["broadcast"]
+    # the spine-bounded reduction feeding the broadcast fold (what `auto`
+    # runs for a small spine over a large feature side)
+    reduced = pit._spine_bounded(spine, feats, ["k"], "ts", "fts", direction)
+    got["bounded"] = sorted(
+        map(repr, pit._asof_broadcast(
+            spine, reduced, ["k"], "ts", "fts", ["v"], tolerance, direction
+        ).collect())
+    )
+    assert got["union"] == got["broadcast"] == got["bounded"]
     assert len(got["union"]) == len(spine_rows)

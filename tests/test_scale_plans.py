@@ -1079,13 +1079,14 @@ def test_metric_cum_minmax_windows_over_aggregated_frame(spark):
 # Broadcast as-of join: the spine passes through a map-side probe
 # ---------------------------------------------------------------------------
 
-def _plan_nodes(node):
+def _plan_nodes(node, into_broadcast=False):
     """Every physical operator under ``node``, looking through the AQE
     wrapper and into query stages; a BroadcastExchange subtree (the
-    small, broadcast side) is yielded but not entered."""
+    small, broadcast side) is yielded but not entered unless
+    ``into_broadcast``."""
     yield node
     name = node.nodeName()
-    if name == "BroadcastExchange":
+    if name == "BroadcastExchange" and not into_broadcast:
         return
     if name == "AdaptiveSparkPlan":
         kids = [node.executedPlan()]
@@ -1095,7 +1096,7 @@ def _plan_nodes(node):
         ch = node.children()
         kids = [ch.apply(i) for i in range(ch.size())]
     for k in kids:
-        yield from _plan_nodes(k)
+        yield from _plan_nodes(k, into_broadcast)
 
 
 def test_broadcast_asof_dataset_never_shuffles_or_regroups_the_spine(
@@ -1147,3 +1148,59 @@ def test_broadcast_asof_dataset_never_shuffles_or_regroups_the_spine(
             keys = n.groupingExpressions()
             grouped = {keys.apply(i).name() for i in range(keys.size())}
             assert not grouped & spine_only, n.toString()
+
+
+def test_spine_bounded_dataset_never_shuffles_the_feature_payload(
+    fs, spark, tmp_path, monkeypatch
+):
+    """A dataset whose FV is above the broadcast gate and whose spine is
+    under it: the feature side is cut down by key-only passes before the
+    broadcast fold. No shuffle carries a feature or spine payload column
+    (the candidate arrays' ``collect_list`` ships only its buffer), and
+    there is no union. At a gate of 0 the union plan shuffles both."""
+    import datetime as dt
+    import functools
+
+    from dbt_snowflake_feature_store_spark import Entity, FeatureView, pit
+
+    base = dt.datetime(2024, 1, 1)
+    spark.range(4000).select(
+        (F.col("id") % 7).alias("user_id"),
+        (F.lit(base) + F.make_interval(mins=F.col("id"))).alias("fts"),
+        F.sha2(F.col("id").cast("string"), 256).alias("f_payload"),
+    ).write.parquet(str(tmp_path / "feats"))
+    feats = spark.read.parquet(str(tmp_path / "feats"))
+    spark.createDataFrame(
+        [(i, i % 5, base + dt.timedelta(hours=i), i % 2) for i in range(20)],
+        "event_id long, user_id long, event_time timestamp, label int",
+    ).coalesce(1).write.parquet(str(tmp_path / "spine"))
+    spine = spark.read.parquet(str(tmp_path / "spine"))
+    gate = 2 * pit._plan_size_bytes(spine)
+    assert pit._plan_size_bytes(feats) > 2 * gate
+
+    fs.register_entity(Entity("user", ["user_id"]))
+    fv = fs.register_feature_view(
+        FeatureView("wide_fv", ["user"], df=feats, timestamp_col="fts"), "1"
+    )
+    # the union plan carries the feature row as the struct `__fs_row`
+    payload = {"f_payload", "__fs_row", "event_id", "label"}
+    orig = pit.asof_join
+
+    def shuffled(threshold):
+        monkeypatch.setattr(
+            pit, "asof_join", functools.partial(orig, broadcast_threshold=threshold)
+        )
+        df = fs.dataset_df(spine, [fv], spine_timestamp_col="event_time")
+        assert len(df.collect()) == 20  # also finalises the adaptive plan
+        plan = df._jdf.queryExecution().executedPlan()
+        nodes = list(_plan_nodes(plan, into_broadcast=True))
+        assert ("Union" in [n.nodeName() for n in nodes]) == (threshold == 0)
+        out = set()
+        for n in nodes:
+            if n.nodeName() == "Exchange":
+                attrs = n.output()
+                out |= {attrs.apply(i).name() for i in range(attrs.size())}
+        return out & payload
+
+    assert shuffled(gate) == set()
+    assert shuffled(0) == {"__fs_row", "event_id", "label"}
