@@ -16,8 +16,11 @@ three plans by Catalyst's size estimates:
     picks each spine row's feature row. The spine is never shuffled or
     regrouped. Also available by request.
 
-spine-bounded ``broadcast`` (feature side above the threshold, spine
-at most the threshold, both plans deterministic)
+spine-bounded ``broadcast`` (feature side above the threshold; what
+the cut leaves, estimated as the spine's rows at the feature row's
+width, at most the threshold; no key with more than
+``SPINE_TS_PER_KEY_MAX`` distinct spine timestamps; no ``salt``; both
+plans deterministic)
     A key-only pass first cuts the feature side down to the rows that
     can win (``_spine_bounded``): per key, the latest feature ts inside
     each gap between consecutive spine timestamps. Only those rows, and
@@ -47,6 +50,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType, VariantType
 
 from .errors import ValidationError
 
@@ -55,6 +59,7 @@ _TS = "__fs_ts"
 
 
 BROADCAST_THRESHOLD_BYTES = 10 * 1024 * 1024  # Spark's autoBroadcast default
+SPINE_TS_PER_KEY_MAX = 64
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
@@ -71,13 +76,42 @@ def _deterministic(df: DataFrame) -> bool:
     return bool(df._jdf.queryExecution().optimizedPlan().deterministic())
 
 
-def latest_order(ts: str, cols: Sequence[str]) -> Column:
-    """What "latest row" means everywhere: the feature ts, then the
-    ``xxhash64`` of ``struct(ts, *cols)`` to break an exact (key, ts) tie.
-    The greatest keeps the row every as-of strategy attaches."""
+def _row_bytes(df: DataFrame) -> int:
+    """Catalyst's per-row size estimate: 8 bytes of row overhead plus the
+    default size of each column's type."""
+    return 8 + int(df._jdf.schema().defaultSize())
+
+
+def _feature_row(ts: str, cols: Sequence[str]) -> Column:
+    """A feature row as one struct: its ts, then ``cols``."""
+    return F.struct(F.col(ts).alias("__fs_row_ts"), *[F.col(c).alias(c) for c in cols])
+
+
+def _tie_hash(row: Column, df: DataFrame, cols: Sequence[str]) -> Column:
+    """The ``xxhash64`` that breaks an exact (key, ts) tie between feature
+    rows; ``row`` is ``_feature_row`` over ``df``'s ``cols``. Spark hashes
+    no map or variant, so a row holding one is hashed by its JSON text."""
+    def unhashable(t: DataType) -> bool:
+        if isinstance(t, (MapType, VariantType)):
+            return True
+        if isinstance(t, ArrayType):
+            return unhashable(t.elementType)
+        if isinstance(t, StructType):
+            return any(unhashable(f.dataType) for f in t.fields)
+        return False
+
+    if any(unhashable(f.dataType) for f in df.select(*cols).schema.fields):
+        return F.xxhash64(F.to_json(row))
+    return F.xxhash64(row)
+
+
+def latest_order(df: DataFrame, ts: str, cols: Sequence[str]) -> Column:
+    """What "latest row" means everywhere: the feature ts, then the tie
+    hash of ``_feature_row(ts, cols)``. The greatest keeps the row every
+    as-of strategy attaches."""
     return F.struct(
         F.col(ts).alias("t"),
-        F.xxhash64(F.struct(F.col(ts), *[F.col(c) for c in cols])).alias("h"),
+        _tie_hash(_feature_row(ts, cols), df, [ts, *cols]).alias("h"),
     )
 
 
@@ -86,17 +120,15 @@ def latest_per_key(
 ) -> DataFrame:
     """``on`` and ``cols`` of each key's latest row by ``latest_order``:
     the row an as-of join attaches to a spine ts at or after the key's
-    last feature ts. One ``max`` over ``(order, row)`` structs (cheaper
-    than ``max_by``: one buffer column), no window sort; a NULL-ts row
-    is never the latest."""
-    row = F.struct(
-        latest_order(ts, [c for c in cols if c != ts]).alias("o"),
-        F.struct(*[F.col(c) for c in cols]).alias("r"),
-    )
+    last feature ts. One ``max_by`` (the row itself is never ordered, so
+    map columns are fine), no window sort; a NULL-ts row is never the
+    latest."""
+    order = latest_order(df, ts, [c for c in cols if c != ts])
+    row = F.struct(*[F.col(c) for c in cols])
     return (
         df.groupBy(*on)
-        .agg(F.max(F.when(F.col(ts).isNotNull(), row)).alias("__fs_latest"))
-        .select(*on, *[F.col(f"__fs_latest.r.{c}").alias(c) for c in cols])
+        .agg(F.max_by(row, F.when(F.col(ts).isNotNull(), order)).alias("__fs_latest"))
+        .select(*on, *[F.col(f"__fs_latest.{c}").alias(c) for c in cols])
     )
 
 
@@ -129,11 +161,15 @@ def asof_join(
     strategy : 'auto' (default) picks 'broadcast' when Catalyst's size
         estimate for the feature side is under ``broadcast_threshold``
         (dimension-sized FV → no shuffle of the spine at all). Above it,
-        a spine under the threshold first cuts the feature side down to
-        the rows that can win, then takes the broadcast fold (both plans
-        must be deterministic: each side is read twice). Otherwise
-        'union' (single-shuffle scale path). 'broadcast' and 'union' can
-        be forced; a forced 'broadcast' never reduces.
+        when the cut side (the spine's estimated rows at the feature
+        row's width) is under the threshold and no key has more than
+        ``SPINE_TS_PER_KEY_MAX`` distinct spine timestamps, the feature
+        side is first cut down to the rows that can win, then
+        broadcast-folded (both plans must be deterministic: each side is
+        read twice; ``salt`` opts out). Otherwise 'union'
+        (single-shuffle scale path).
+        'broadcast' and 'union' can be forced; a forced 'broadcast'
+        never reduces.
     tolerance : optional max lookback (backward) / lookahead (forward) as
         an INTERVAL string (e.g. '30 days'); rows outside yield NULLs.
     direction : 'backward' (default) attaches the greatest
@@ -147,7 +183,8 @@ def asof_join(
         window splits across R tasks (AQE cannot split a running window).
         Results are identical for any R; cost is R× the feature rows of
         the salted window shuffle. Ignored by the broadcast strategy
-        (joins after broadcast never shuffle on the key).
+        (joins after broadcast never shuffle on the key); under 'auto' it
+        rules out the spine-bounded cut, which would not split a hot key.
     """
     on = list(on)
     for k in on:
@@ -175,21 +212,25 @@ def asof_join(
         )
 
     if strategy == "auto":
-        if direction == "nearest":
-            strategy = "union"
-        else:
-            def small(df: DataFrame) -> bool:
-                sz = _plan_size_bytes(df)
-                return sz is not None and 0 < sz <= broadcast_threshold
+        def fits(sz: int | None) -> bool:
+            return sz is not None and 0 < sz <= broadcast_threshold
 
-            strategy = "union"
-            if small(features):
-                strategy = "broadcast"
-            elif small(spine) and _deterministic(spine) and _deterministic(features):
-                features = _spine_bounded(
-                    spine, features, on, spine_ts, feature_ts, direction
-                )
-                strategy = "broadcast"
+        strategy = "union"
+        if direction == "nearest":
+            pass
+        elif fits(_plan_size_bytes(features)):
+            strategy = "broadcast"
+        elif salt is None and _deterministic(spine) and _deterministic(features):
+            # What the cut leaves for the broadcast is at most one feature
+            # row per spine row (plus exact ties): the spine's estimate,
+            # rescaled from its row width to the feature row's.
+            sz = _plan_size_bytes(spine)
+            width = _row_bytes(features.select(*on, feature_ts, *feature_cols))
+            cut = None
+            if sz is not None and fits(sz * width // _row_bytes(spine)):
+                cut = _spine_bounded(spine, features, on, spine_ts, feature_ts, direction)
+            if cut is not None:
+                features, strategy = cut, "broadcast"
 
     if strategy == "union":
         return _asof_union(
@@ -210,7 +251,7 @@ def _spine_bounded(
     spine_ts: str,
     feature_ts: str,
     direction: str,
-) -> DataFrame:
+) -> DataFrame | None:
     """The feature rows that can win a backward (forward) as-of join
     against ``spine``: per key, the latest (earliest) feature ts in each
     interval ``(previous spine ts, m]`` (``[m, next spine ts)``) of the
@@ -221,11 +262,20 @@ def _spine_bounded(
     the hash tiebreak. Key-only passes: the spine's marks are shuffled,
     the feature side is range-joined (as key and ts only) against the
     broadcast intervals, aggregated to one ts per interval and
-    semi-joined back. Per feature row this costs O(distinct spine
-    timestamps of its key), the bound of the fold itself."""
+    semi-joined back.
+
+    Each feature row is compared with every interval of its key, and the
+    fold then scans the key's cut rows once per spine row, so both cost
+    O(distinct spine timestamps of the key) per row. One small job over
+    the spine's marks bounds that: None (take the union) when some key
+    has more than ``SPINE_TS_PER_KEY_MAX``."""
     back = direction == "backward"
     m, edge, t = "__fs_m", "__fs_bound", "__fs_t"
     marks = spine.select(*on, F.col(spine_ts).alias(m)).dropna().distinct()
+    per_key = marks.groupBy(*on).agg(F.count(F.lit(1)).alias("__fs_n"))
+    most = per_key.agg(F.max("__fs_n")).first()[0]
+    if (most or 0) > SPINE_TS_PER_KEY_MAX:
+        return None
     w = Window.partitionBy(*on).orderBy(m)
     intervals = marks.withColumn(edge, (F.lag if back else F.lead)(m).over(w))
     keys = features.select(*on, F.col(feature_ts).alias(t)).dropna()
@@ -281,15 +331,12 @@ def _asof_union(
     # Filling each column independently with last(ignorenulls) would
     # backfill NULL fields of the latest row from older rows —
     # synthesizing a feature row that never existed.
-    feat_struct = F.struct(
-        F.col(feature_ts).alias("__fs_row_ts"),
-        *[F.col(c).alias(c) for c in feature_cols],
-    )
     tagged_feat = features.select(
         *on,
         F.col(feature_ts).alias(_TS),
-        feat_struct.alias("__fs_row"),
+        _feature_row(feature_ts, feature_cols).alias("__fs_row"),
     ).withColumn(_IS_SPINE, F.lit(0))
+    tie = _tie_hash(F.col("__fs_row"), features, [feature_ts, *feature_cols])
     for c in spine_cols:
         if c not in on:
             tagged_feat = tagged_feat.withColumn(c, F.lit(None))
@@ -318,7 +365,8 @@ def _asof_union(
     # fv.ts <= spine.ts inclusive semantics (backward; the forward
     # direction reverses the ts sort so the carry picks the EARLIEST
     # at-or-after row instead). Among duplicate feature timestamps per
-    # key, the struct hash is the final tiebreak so the chosen row is
+    # key, the tie hash (``_tie_hash``, the hash ``latest_order`` ranks
+    # by) is the final tiebreak so the chosen row is
     # stable across runs/AQE reordering (which row of an exact (key, ts)
     # tie wins is engine-defined, but deterministic). The hash direction
     # flips with ts so both strategies pick the identical tied row
@@ -340,7 +388,7 @@ def _asof_union(
         # compared as day-time INTERVALS — no epoch casts, no sub-second
         # precision loss.
         order = [
-            F.col(_TS).asc(), F.col(_IS_SPINE).asc(), F.xxhash64("__fs_row").asc()
+            F.col(_TS).asc(), F.col(_IS_SPINE).asc(), tie.asc()
         ]
         w_b = (
             Window.partitionBy(*part_keys)
@@ -380,13 +428,13 @@ def _asof_union(
 
     if direction == "backward":
         order = [
-            F.col(_TS).asc(), F.col(_IS_SPINE).asc(), F.xxhash64("__fs_row").asc()
+            F.col(_TS).asc(), F.col(_IS_SPINE).asc(), tie.asc()
         ]
     else:
         order = [
             F.col(_TS).desc_nulls_first(),
             F.col(_IS_SPINE).asc(),
-            F.xxhash64("__fs_row").desc(),
+            tie.desc(),
         ]
     w = (
         Window.partitionBy(*part_keys)
@@ -497,15 +545,12 @@ def asof_join_bracket(
         .withColumn(_TS, F.col(spine_ts))
         .withColumn("__fs_row", F.lit(None))
     )
-    feat_struct = F.struct(
-        F.col(feature_ts).alias("__fs_row_ts"),
-        *[F.col(c).alias(c) for c in feature_cols],
-    )
     tagged_feat = features.select(
         *on,
         F.col(feature_ts).alias(_TS),
-        feat_struct.alias("__fs_row"),
+        _feature_row(feature_ts, feature_cols).alias("__fs_row"),
     ).withColumn(_IS_SPINE, F.lit(0))
+    tie = _tie_hash(F.col("__fs_row"), features, [feature_ts, *feature_cols])
     for c in spine_cols:
         if c not in on:
             tagged_feat = tagged_feat.withColumn(c, F.lit(None))
@@ -517,7 +562,7 @@ def asof_join_bracket(
     # sort first (asc nulls-first) so their backward side is naturally
     # NULL and the forward side is masked below.
     order = [
-        F.col(_TS).asc(), F.col(_IS_SPINE).asc(), F.xxhash64("__fs_row").asc()
+        F.col(_TS).asc(), F.col(_IS_SPINE).asc(), tie.asc()
     ]
     w_b = (
         Window.partitionBy(*on)
@@ -570,10 +615,11 @@ def _asof_broadcast(
     through untouched (no join explosion, no row id, no regroup over spine
     columns, which would normalise -0.0/NaN); a NULL key or spine ts
     matches nothing. Per spine row the fold costs O(feature rows of its
-    key), never more than the rows a range join would materialise."""
+    key), never more than the rows a range join would materialise; after
+    ``_spine_bounded``, O(spine rows of its key plus exact ties)."""
     spine_cols = spine.columns
     cand = F.struct(
-        latest_order(feature_ts, feature_cols).alias("k"),
+        latest_order(features, feature_ts, feature_cols).alias("k"),
         F.struct(*[F.col(c).alias(c) for c in feature_cols]).alias("r"),
     )
     cands = (

@@ -222,6 +222,50 @@ def test_exact_ts_tie_serves_the_row_training_attaches(fs, spark, tmp_path):
     assert got["union"] >= 0.0  # a tied row at t, never the older one
 
 
+def test_map_feature_column_exports_and_serves_the_training_row(fs, spark, tmp_path):
+    """A MAP feature column, with three rows tied on one (key, ts): Spark
+    neither hashes nor orders maps, so the tie hash reads the row's JSON.
+    Export, the timeless-spine retrieve and both as-of strategies run and
+    keep the same tied row."""
+    import datetime as dt
+
+    from dbt_snowflake_feature_store_spark import asof_join
+
+    t = dt.datetime(2024, 1, 1)
+    path = str(tmp_path / "mapped.parquet")
+    spark.createDataFrame(
+        [(1, t, {"v": float(v)}, float(v)) for v in range(3)]
+        + [(2, t - dt.timedelta(days=1), {"v": 9.0}, 9.0)],
+        "cust_id INT, ts TIMESTAMP, m MAP<STRING, DOUBLE>, v DOUBLE",
+    ).coalesce(1).write.parquet(path)
+    fs.register_source("mapped", path)
+    fs.register_entity(Entity(name="cust", join_keys=["cust_id"]))
+    fv = fs.register_feature_view(
+        FeatureView("mapped_fv", ["cust"], sql="SELECT cust_id, ts, m, v FROM mapped",
+                    timestamp_col="ts"),
+        version="1.0",
+    )
+    feats = spark.read.parquet(path)
+    spine = spark.createDataFrame([(1, t), (2, t)], "cust_id INT, event_time TIMESTAMP")
+
+    def rows(df):
+        return sorted((r["cust_id"], r["m"]["v"], r["v"]) for r in df.collect())
+
+    got = {
+        s: rows(asof_join(spine, feats, ["cust_id"], "event_time", "ts", ["m", "v"],
+                          strategy=s))
+        for s in ("union", "broadcast")
+    }
+    got["timeless"] = rows(fs.retrieve_feature_values(
+        spark.createDataFrame([(1,), (2,)], "cust_id INT"), [fv]
+    ))
+    fs.export_online_store("mapped_fv", "1.0")
+    got["online"] = rows(fs.read_online("mapped_fv", "1.0"))
+    assert len({repr(v) for v in got.values()}) == 1, got
+    (k1, m1, v1), (k2, m2, v2) = got["union"]
+    assert (k1, k2, m2, v2) == (1, 2, 9.0, 9.0) and m1 == v1
+
+
 def test_retrieve_online_features_batch_join(fs, spark, fv_with_history):
     fs.export_online_store("spend_fv", "1.0")
     spine = spark.createDataFrame([(1,), (2,), (7,)], "cust_id INT")

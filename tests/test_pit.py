@@ -15,7 +15,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_snowflake_feature_store_spark import Entity, FeatureView, asof_join
+from dbt_snowflake_feature_store_spark import Entity, FeatureView, asof_join, pit
 from dbt_snowflake_feature_store_spark.pit import _plan_size_bytes
 
 BASE = dt.datetime(2024, 6, 30, 12, 0, 0)
@@ -313,52 +313,140 @@ class TestAsofJoin:
                 "updated_at"
             ),
             F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+            *[(F.col("id") * i).cast("double").alias(f"e{i}") for i in range(48)],
         ).write.parquet(str(tmp_path / "feats"))
         sp = spark.read.parquet(str(tmp_path / "spine"))
         ft = spark.read.parquet(str(tmp_path / "feats"))
         lo, hi = _plan_size_bytes(sp), _plan_size_bytes(ft)
-        assert 0 < 4 * lo < hi
+        assert 0 < 64 * lo < hi
         return sp, ft, 2 * lo
 
+    _KW = dict(on=["customer_id"], spine_ts="event_time", feature_ts="updated_at")
+
     @staticmethod
-    def _plan(df) -> str:
+    def _nodes(df):
+        """Every operator of ``df``'s final adaptive plan."""
         df.count()  # finalises the adaptive plan
-        return df._jdf.queryExecution().executedPlan().toString()
+        todo = [df._jdf.queryExecution().executedPlan()]
+        while todo:
+            n = todo.pop()
+            yield n
+            if n.nodeName() == "AdaptiveSparkPlan":
+                todo.append(n.executedPlan())
+            elif "QueryStage" in n.nodeName():
+                todo.append(n.plan())
+            else:
+                ch = n.children()
+                todo.extend(ch.apply(i) for i in range(ch.size()))
+
+    def _carriers(self, df, col: str) -> set[str]:
+        """The shuffles, sorts, windows and unions whose output carries
+        ``col``, as a column or inside a struct."""
+        out = set()
+        for n in self._nodes(df):
+            if n.nodeName() in ("Exchange", "Sort", "Window", "Union"):
+                attrs = n.output()
+                for i in range(attrs.size()):
+                    a = attrs.apply(i)
+                    if col in f"{a.name()}:{a.dataType().catalogString()}":
+                        out.add(n.nodeName())
+        return out
 
     def test_auto_bounds_a_large_feature_side_by_a_small_spine(self, sized):
-        """Feature side above the gate, spine under it: the feature side
-        is cut down and broadcast-folded. No union, and the only window
-        is the spine marks' (it never sees a feature column)."""
+        """Feature side above the gate, the cut side under it: the feature
+        side is cut down and broadcast-folded. The union, sort and window
+        that pick the rows see keys and timestamps only; no shuffle, sort,
+        window or union carries a feature column."""
         spine, feats, gate = sized
-        kw = dict(on=["customer_id"], spine_ts="event_time",
-                  feature_ts="updated_at")
+        feats = feats.select("customer_id", "updated_at", "payload")
         for direction in ("backward", "forward"):
             auto = asof_join(spine, feats, broadcast_threshold=gate,
-                             direction=direction, **kw)
-            plan = self._plan(auto)
-            assert "Union" not in plan and "LeftSemi" in plan, plan[:3000]
-            windows = [ln for ln in plan.splitlines() if "Window [" in ln]
-            assert windows and not any("payload" in ln for ln in windows)
+                             direction=direction, **self._KW)
+            assert self._carriers(auto, "payload") == set()
+            assert "LeftSemi" in {
+                str(n.joinType()) for n in self._nodes(auto)
+                if n.nodeName() == "BroadcastHashJoin"
+            }
             union = asof_join(spine, feats, strategy="union",
-                              direction=direction, **kw)
+                              direction=direction, **self._KW)
             got = sorted(map(tuple, auto.collect()))
             assert got == sorted(map(tuple, union.collect()))
             assert all(r[-1] is not None for r in got)
 
-    def test_auto_unions_when_the_spine_is_large_or_random(self, sized):
-        """The other sides of the gate: a threshold of 0 (spine too large)
-        and a nondeterministic spine, which a reduction would read twice,
-        both take the union plan."""
+    def test_auto_unions_when_the_spine_is_large_salted_or_random(self, sized):
+        """The other sides of the gate: a threshold of 0 (cut side too
+        large), ``salt`` (a hot key would make the fold quadratic) and a
+        nondeterministic spine (a cut would read it twice) all take the
+        union plan, which shuffles the payload."""
         spine, feats, gate = sized
-        kw = dict(on=["customer_id"], spine_ts="event_time",
-                  feature_ts="updated_at")
-        assert "Union" in self._plan(
-            asof_join(spine, feats, broadcast_threshold=0, **kw)
-        )
+        feats = feats.select("customer_id", "updated_at", "payload")
+        carried = {"Exchange", "Sort", "Window", "Union"}
+        assert self._carriers(
+            asof_join(spine, feats, broadcast_threshold=0, **self._KW), "payload"
+        ) == carried
+        assert self._carriers(
+            asof_join(spine, feats, broadcast_threshold=gate, salt=2, **self._KW),
+            "payload",
+        ) == carried
         rnd = spine.withColumn("r", F.rand(seed=3))
         assert _plan_size_bytes(rnd) <= gate
-        plan = self._plan(asof_join(rnd, feats, broadcast_threshold=gate, **kw))
-        assert "Union" in plan and "LeftSemi" not in plan
+        assert self._carriers(
+            asof_join(rnd, feats, broadcast_threshold=gate, **self._KW), "payload"
+        ) == carried
+
+    def test_auto_sizes_the_cut_side_at_the_feature_row_width(self, sized):
+        """The broadcast after the cut holds up to one feature row per
+        spine row, so a wide feature row (48 more double columns) pushes
+        a spine that passes for a narrow one back to the union; a
+        threshold scaled by the width ratio takes the cut again."""
+        spine, feats, gate = sized
+        assert self._carriers(
+            asof_join(spine, feats, broadcast_threshold=gate, **self._KW), "e47"
+        ) == {"Exchange", "Sort", "Window", "Union"}
+        wide = asof_join(spine, feats, broadcast_threshold=16 * gate, **self._KW)
+        assert self._carriers(wide, "e47") == set()
+        union = asof_join(spine, feats, strategy="union", **self._KW)
+        assert sorted(map(tuple, wide.collect())) == sorted(
+            map(tuple, union.collect())
+        )
+
+    def test_auto_unions_a_spine_with_a_hot_key(self, spark, tmp_path):
+        """The cut compares each feature row with every spine ts of its
+        key, and the fold scans the key's cut rows once per spine row. A
+        key with ``SPINE_TS_PER_KEY_MAX`` distinct spine timestamps (each
+        on two rows) still takes the cut; one more takes the union. Both
+        attach what the union attaches, in both directions, with three
+        feature rows tied on every ts."""
+        cap = pit.SPINE_TS_PER_KEY_MAX
+        base = _days_back(30)
+        spark.range(4000).select(
+            F.lit(1).cast("long").alias("customer_id"),
+            (F.lit(base) + F.make_interval(mins=(F.col("id") / 3).cast("int") * 10)).alias(
+                "updated_at"
+            ),
+            F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+        ).write.parquet(str(tmp_path / "feats"))
+        feats = spark.read.parquet(str(tmp_path / "feats"))
+        for marks, carried in ((cap, set()), (cap + 1, {"Exchange", "Sort", "Window", "Union"})):
+            path = str(tmp_path / f"spine{marks}")
+            spark.range(2 * marks).select(
+                F.lit(1).cast("long").alias("customer_id"),
+                (F.lit(base) + F.make_interval(mins=(F.col("id") / 2).cast("int") * 97)).alias(
+                    "event_time"
+                ),
+            ).coalesce(1).write.parquet(path)
+            spine = spark.read.parquet(path)
+            gate = 4 * _plan_size_bytes(spine)
+            assert _plan_size_bytes(feats) > gate
+            for direction in ("backward", "forward"):
+                auto = asof_join(spine, feats, broadcast_threshold=gate,
+                                 direction=direction, **self._KW)
+                assert self._carriers(auto, "payload") == carried
+                union = asof_join(spine, feats, strategy="union",
+                                  direction=direction, **self._KW)
+                assert sorted(map(tuple, auto.collect())) == sorted(
+                    map(tuple, union.collect())
+                )
 
     def test_tolerance_cuts_stale_features(self, spark, snapshots, spine):
         out = asof_join(
